@@ -20,8 +20,22 @@
   all-pairs; ``ngram_jaccard_pairs`` keeps the source-blocked exact
   variant as a small-block diagnostic.
 - ``dedup_groups``: the end-to-end product — LSH candidates → exact
-  verify → connected components (iterative min-label propagation) →
-  survivor assignment for EVERY document.
+  verify → connected components → survivor assignment for EVERY
+  document.
+
+Driver path. Two gates bound what may pass through the driver:
+``VERIFY_BROADCAST_MAX_PAIRS`` candidate pairs and
+``BROADCAST_COMPONENTS_MAX_EDGES`` verified edges. Each stage decides
+its path from ONE bounded collect (``limit(gate + 1).toArrow()``). At
+or below its gate the small intermediate is finished on the driver in
+one pass — the participant ids by ``np.unique``, the components by a
+vectorized numpy union-find — and goes back to Spark as a broadcast
+frame, the same bytes the broadcast plans already held on the driver.
+Above its gate each stage keeps its distributed plan (shuffle joins;
+large-star/small-star rounds), so a corpus past the gates never needs
+more driver memory than the gate allows. On a 1k-document corpus with
+~5k verified pairs this took one ``dedup_groups`` call from 29 Spark
+jobs (68 stages) to 13 (19).
 
 Every op has its DuckDB oracle twin in this file; hashes are the
 md5-based portable ones from ``common`` so both engines agree
@@ -291,7 +305,8 @@ def minhash_lsh_pairs(
     a better score anyway.
 
     Plan shape (r2 rework, measured ~2× at the 128-perm production
-    config): signatures (map, PERSISTED — three consumers) → explode
+    config): signatures (map, PERSISTED when the estimate is wanted —
+    three consumers; the raw candidate set reads them once) → explode
     to (doc_id, band, band_sig) WITHOUT the signature array → band
     self-equi-join → distinct (doc_a, doc_b) → join the two signatures
     back on doc_id for the estimate. The band exchange and the
@@ -308,10 +323,12 @@ def minhash_lsh_pairs(
     """
     from pyspark.storagelevel import StorageLevel
 
-    sigs = minhash_signatures(documents, hash_impl, n_perms).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _PERSISTED_SIGS.append(sigs)
+    sigs = minhash_signatures(documents, hash_impl, n_perms)
+    if threshold > 0.0:
+        # band explode + both estimate joins read the signatures; the
+        # raw candidate set (threshold <= 0) reads them only once
+        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+        _PERSISTED_SIGS.append(sigs)
     bands = band_frame(sigs, n_perms, n_bands)
 
     # bucket-and-combine instead of a band self-equi-join (r7): one
@@ -519,45 +536,56 @@ def verified_pairs(
     shuffle joins on doc_id against the shingle-set frame (key =
     unique doc_id, co-partitioned, no skew) → per-pair HOF intersect.
     No cross join anywhere; cost is O(candidates), not O(n²).
+
+    Driver path: one bounded collect of at most
+    ``VERIFY_BROADCAST_MAX_PAIRS + 1`` candidate pairs decides the
+    plan. At or below the gate the collected Arrow table IS the
+    candidate set: its participant ids come from ``np.unique`` and
+    both go back as broadcast frames, so no Spark job counts the
+    candidates or distincts their ids. Above the gate the verify
+    stage keeps the shuffle-join plan.
     """
+    import numpy as np
+    import pyarrow as pa
     from pyspark.storagelevel import StorageLevel
 
+    spark = documents.sparkSession
     cand = (
         minhash_lsh_pairs(
             documents, threshold=0.0, hash_impl=hash_impl,
             n_perms=n_perms, n_bands=n_bands,
         )
         .select("doc_a", "doc_b")
-        .persist(StorageLevel.MEMORY_AND_DISK)  # read 3× below (ids + join)
+        .persist(StorageLevel.MEMORY_AND_DISK)  # the fallback join re-reads it
     )
-    _PERSISTED_SIGS.append(cand)
     # the broadcast plan below ships the CANDIDATE pair frame (and,
     # in the second join, candidate SHINGLE arrays ~1 KB each) to every
     # executor — a win while candidates ≪ corpus, a driver-OOM/8-GB-
     # limit job killer on a candidate-heavy (crawl-skew) corpus. Gate
-    # on the exact candidate count (free: cand is persisted and the
-    # count materializes it for the joins anyway); above the gate fall
+    # on the candidate count, read off one bounded collect that below
+    # the gate also delivers the pairs themselves; above the gate fall
     # back to the pre-r5 shape — shingle everything narrow, plain
     # shuffle joins — which degrades gracefully instead of failing
     # (r5 ADVICE item 1).
-    n_cand = cand.count()
-    small = n_cand <= VERIFY_BROADCAST_MAX_PAIRS
+    local = cand.limit(VERIFY_BROADCAST_MAX_PAIRS + 1).toArrow()
+    small = local.num_rows <= VERIFY_BROADCAST_MAX_PAIRS
     if small:
+        cand.unpersist()
+        cand = spark.createDataFrame(local)
         # shingle sets are heavy — compute them ONLY for candidate
         # participants, and once, not once per join side. The
-        # participant-id set must BROADCAST (explicitly: its stats are
-        # unknown at planning because cand is lazily persisted, and a
-        # fallback sort-merge semi-join would shuffle the corpus TEXT —
-        # the byte audit caught exactly that, 55.6→277 B/row).
-        ids = (
-            cand.select(F.col("doc_a").alias("doc_id"))
-            .union(cand.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
+        # participant-id set must BROADCAST: a sort-merge semi-join
+        # would shuffle the corpus TEXT (the byte audit caught exactly
+        # that, 55.6→277 B/row).
+        ids = np.unique(np.concatenate(
+            [local["doc_a"].to_numpy(), local["doc_b"].to_numpy()]
+        ))
+        ids = spark.createDataFrame(pa.table({"doc_id": ids}))
         sh = spread(documents).join(F.broadcast(ids), "doc_id", "left_semi").select(
             "doc_id", shingles_expr("text", SHINGLE_K).alias("sh")
         )
     else:
+        _PERSISTED_SIGS.append(cand)
         sh = spread(documents).select("doc_id", shingles_expr("text", SHINGLE_K).alias("sh"))
     sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     _PERSISTED_SIGS.append(sh)
@@ -603,11 +631,55 @@ WHERE CAST(floor(1000.0 * {inter} / ({union})) AS INT) >= {int(jaccard_threshold
 
 # ------------------------------------------------- duplicate groups (CC)
 
+def _components_numpy(a, b):
+    """Connected components of the undirected edges ``(a[i], b[i])``
+    (numpy id arrays, no self-loops) → ``(nodes, component)``, the
+    component being the smallest node id in it.
+
+    Vectorized union-find over dense node indices: each round hooks
+    the larger root of every edge whose ends still differ under the
+    smaller one (min-label hooking, one ``np.minimum.at``), then
+    pointer jumping flattens the forest until the labels stop
+    changing. Roots only ever decrease, so a root is its tree's
+    minimum; edges whose ends share a root drop out for good."""
+    import numpy as np
+
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = idx[: len(a)], idx[len(a):]
+    parent = np.arange(len(nodes))
+    while len(u):
+        ru, rv = parent[u], parent[v]
+        live = ru != rv
+        u, v, ru, rv = u[live], v[live], ru[live], rv[live]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return nodes, nodes[parent]
+
+
 def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFrame:
     """Connected components over an undirected edge list ``(doc_a,
-    doc_b)`` via alternating large-star / small-star rounds (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", SoCC
-    2014) — the web-scale CC: converges in O(log n) rounds on ANY
+    doc_b)``.
+
+    Returns ``(doc_id, component)`` for every node that appears in an
+    edge (singletons, self-loop-only nodes and NULL ends absent —
+    callers left-join and coalesce); ``component`` is the smallest
+    doc_id of the node's component.
+
+    Driver path: one bounded collect of at most
+    ``BROADCAST_COMPONENTS_MAX_EDGES + 1`` edges decides the plan. At
+    or below the gate the edges are solved on the driver by a numpy
+    union-find (``_components_numpy``) and the assignment comes back
+    as a broadcast frame — the survivor join broadcast it at this size
+    anyway, so the driver holds nothing the broadcast did not. Above
+    the gate the distributed star loop below runs.
+
+    The star loop uses alternating large-star / small-star rounds
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC 2014) — the web-scale CC: converges in O(log n) rounds on ANY
     graph shape, where plain min-label propagation needs DIAMETER
     rounds (a 10^5-node duplicate chain = 10^5 shuffles).
 
@@ -625,9 +697,6 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
     instead of a full except-join. The fixpoint is a star forest:
     every node's minimum neighbor IS its component minimum.
 
-    Returns ``(doc_id, component)`` for every node that appears in an
-    edge (singletons absent — callers left-join and coalesce).
-
     Physical shape (r7 rework — identical fixpoint, fewer exchanges
     and driver jobs): edges symmetrize via one ``explode`` (no
     union-of-the-same-subtree, so the expensive upstream plan appears
@@ -638,6 +707,21 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
     and materialized by the convergence-signature aggregate — one
     driver job per round instead of two.
     """
+    import pyarrow as pa
+
+    local = (
+        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .limit(BROADCAST_COMPONENTS_MAX_EDGES + 1)
+        .toArrow()
+    )
+    if local.num_rows <= BROADCAST_COMPONENTS_MAX_EDGES:
+        local = local.drop_null()
+        src, dst = local["src"].to_numpy(), local["dst"].to_numpy()
+        keep = src != dst
+        nodes, comp = _components_numpy(src[keep], dst[keep])
+        return F.broadcast(edges.sparkSession.createDataFrame(
+            pa.table({"doc_id": nodes, "component": comp})
+        ))
 
     def sym(cur: DataFrame) -> DataFrame:
         return cur.select(
@@ -723,8 +807,10 @@ def dedup_groups(
     Jaccard), survivor = min doc_id of the component (singletons
     survive as themselves).
 
-    CC is the large-star/small-star algorithm (O(log n) rounds on any
-    graph — ``connected_components``); r1 shipped min-label
+    Below the module's two broadcast gates the candidate set and the
+    components are finished on the driver (see the module docstring);
+    above them CC is the large-star/small-star algorithm (O(log n)
+    rounds on any graph — ``connected_components``); r1 shipped min-label
     propagation, whose round count equals the component DIAMETER — a
     latent non-convergence on adversarial chain-shaped duplicate
     graphs (tested: a 400-node chain converges in <=7 star rounds).

@@ -431,11 +431,16 @@ def parse_token_sequences_arrow(
             # one vectorized range check + uint8 conversion for the
             # whole batch (identity byte vocab holds for virtually all
             # input); per-row min/max only when the batch has any
-            # out-of-vocab token
-            all_bytes = values.size == 0 or (
-                values.min() >= 0 and values.max() <= 255
+            # out-of-vocab token. Only the rows' own window of the
+            # values child counts: a sliced ListArray keeps the parent's
+            # whole values buffer, whose hidden tokens must neither
+            # force the slow path nor be copied.
+            lo = offsets[0]
+            visible = values[lo : offsets[-1]]
+            all_bytes = visible.size == 0 or (
+                visible.min() >= 0 and visible.max() <= 255
             )
-            vals_u8 = values.astype(np.uint8) if all_bytes else None
+            vals_u8 = visible.astype(np.uint8) if all_bytes else None
 
             rows: list[dict] = []
             if all_bytes:
@@ -443,7 +448,7 @@ def parse_token_sequences_arrow(
                     rows.extend(
                         _parse_one_raw(
                             doc_ids[i],
-                            vals_u8[offsets[i] : offsets[i + 1]].tobytes(),
+                            vals_u8[offsets[i] - lo : offsets[i + 1] - lo].tobytes(),
                             n_toks[i],
                             sources[i],
                             build_inner,

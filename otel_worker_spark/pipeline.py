@@ -2,16 +2,21 @@
 
 One micro-batch = one ``ingest_batch`` call (the reference's
 ``Service::ingest_export``, service.rs:32-54, set-oriented). The
-batch is processed in exactly TWO Spark jobs:
+batch is processed in three commits:
 
-1. one partitioned write that lands every signal sink, the quarantine
-   rows and the SpanAdded manifest columns in a single pass (the
-   routed frame is persisted so parse runs once);
-2. one aggregate for the per-sink receipts.
+1. one partitioned write of the routed frame that lands every signal
+   sink and the quarantine rows in a single pass (parse runs once, as
+   part of this write; nothing is persisted);
+2. the just-written batch files are read back, and from them the
+   per-sink receipts and the SpanAdded manifest are appended to their
+   own tables — two more commits, launched together from a 2-thread
+   pool.
 
 All appends are idempotent by batch_id (see store.TableStore), so a
 restarted stream replays safely — the real version of the atomicity
-the reference only fakes (M3, data.rs:43-48).
+the reference only fakes (M3, data.rs:43-48). A replay of a batch
+whose spans committed but whose receipts or manifest did not (a crash
+between the commits) repairs those two tables from the written files.
 """
 
 from __future__ import annotations

@@ -460,6 +460,8 @@ def parse_token_sequences_protobuf(
         for rb in batches:
             names = rb.schema.names
             binary_col = "payload" in names and "tokens" not in names
+            all_bytes = False
+            vals_u8 = None
             if binary_col:
                 payloads = rb.column(names.index("payload")).to_pylist()
             else:

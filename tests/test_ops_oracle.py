@@ -124,24 +124,53 @@ def test_multimodal_plumbing(spark, docs):
     assert {r.media_type for r in summary} == {"image/png", "audio/wav"}
 
 
-def test_connected_components_chain_and_cycles(spark):
-    """Large-star/small-star CC: a 200-node chain (the adversarial
-    diameter case that breaks label propagation's round budget) plus a
-    cycle and a star must all collapse to their min-id component."""
+def test_connected_components_chain_and_cycles(spark, monkeypatch):
+    """Both CC paths — the driver union-find below
+    BROADCAST_COMPONENTS_MAX_EDGES and the large-star/small-star loop
+    above it: a 200-node chain and a 10^5-node chain with shuffled ids
+    (the adversarial diameter case that breaks label propagation's
+    round budget), a 100-node clique, and a cycle and a star must all
+    collapse to their min-id component."""
+    import numpy as np
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     chain = spark.range(199).select(
         F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
     )
-    rows = dd.connected_components(chain).collect()
-    assert len(rows) == 200 and {r.component for r in rows} == {0}
-
+    ids = np.random.default_rng(7).permutation(100_000).astype(np.int64)
+    long_chain = spark.createDataFrame(pa.table({"doc_a": ids[:-1], "doc_b": ids[1:]}))
+    a, b = np.triu_indices(100, k=1)
+    clique = spark.createDataFrame(
+        pa.table({"doc_a": a.astype(np.int64) + 1000, "doc_b": b.astype(np.int64) + 1000})
+    )
     edges = spark.createDataFrame(
         [(10, 11), (11, 12), (20, 21), (21, 22), (22, 20), (30, 31)],
         "doc_a long, doc_b long",
     )
-    got = {r.doc_id: r.component for r in dd.connected_components(edges).collect()}
-    assert got == {10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30}
+    solved = []
+    union_find = dd._components_numpy
+    monkeypatch.setattr(
+        dd, "_components_numpy", lambda u, v: solved.append(1) or union_find(u, v)
+    )
+    for path, gate in (("driver", dd.BROADCAST_COMPONENTS_MAX_EDGES), ("star", 0)):
+        monkeypatch.setattr(dd, "BROADCAST_COMPONENTS_MAX_EDGES", gate)
+        solved.clear()
+
+        rows = dd.connected_components(chain).collect()
+        assert len(rows) == 200 and {r.component for r in rows} == {0}, path
+
+        rows = dd.connected_components(long_chain).collect()
+        assert len(rows) == 100_000 and {r.component for r in rows} == {0}, path
+
+        rows = dd.connected_components(clique).collect()
+        assert len(rows) == 100 and {r.component for r in rows} == {1000}, path
+
+        got = {r.doc_id: r.component for r in dd.connected_components(edges).collect()}
+        assert got == {
+            10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30
+        }, path
+        assert len(solved) == (4 if path == "driver" else 0)
 
 
 def test_dedup_groups_oracle(spark, con, docs):

@@ -230,3 +230,38 @@ def test_engines_equal_wrong_typed_fields(spark):
     )
     assert_engines_equal(df)
     assert_engines_equal(df, with_inner=False)
+
+
+def test_arrow_kernel_sliced_tokens_ignore_hidden_values(monkeypatch):
+    """A sliced token ListArray keeps its parent's whole values buffer.
+    Out-of-vocab tokens in the hidden part must not push the batch off
+    the byte fast path, and the sliced batch must yield the same frame
+    as a compact copy of its rows."""
+    import pyarrow as pa
+
+    from otel_worker_spark import parse_arrow as PA
+
+    class Capture:
+        def mapInArrow(self, kernel, schema):
+            return kernel
+
+    good = list(json.dumps(golden_trace_envelope(), separators=(",", ":")).encode())
+    toks = [[300, -5], good, good, [999]]
+    full = pa.RecordBatch.from_pydict({
+        "doc_id": [f"doc-{i}" for i in range(len(toks))],
+        "tokens": pa.array(toks, pa.list_(pa.int32())),
+        "n_tok": pa.array([len(t) for t in toks], pa.int32()),
+        "source": ["s"] * len(toks),
+    })
+    sliced = full.slice(1, 2)
+    assert sliced.column(1).offsets[0].as_py() > 0  # hidden values exist
+    compact = pa.RecordBatch.from_pylist(sliced.to_pylist(), schema=full.schema)
+    kernel = parse_token_sequences_arrow(Capture())
+    want = pa.Table.from_batches(list(kernel(iter([compact]))))
+
+    def slow_path(*args, **kwargs):
+        raise AssertionError("sliced batch left the byte fast path")
+
+    monkeypatch.setattr(PA, "_parse_one_bytes", slow_path)
+    got = pa.Table.from_batches(list(kernel(iter([sliced]))))
+    assert got.num_rows == 4 and got.equals(want)
