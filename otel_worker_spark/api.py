@@ -31,18 +31,25 @@ the reference's camelCase Span JSON (byte-parity-tested in the serde
 suite), so a TraceSummary is assembled as ``{"traceId": ...,
 "spans": [<inner>...]}`` — no re-serialization layer to drift.
 
-Scale note: this shim is the protocol adapter, not the engine — each
-request issues the SAME single-plan queries the batch layer uses
-(top-k + broadcast semi-join; point lookups prune at the file level).
-A production deployment would put this class behind any WSGI/ASGI
-front; stdlib ``ThreadingHTTPServer`` keeps the sandbox dependency-
-free.
+Scale note: this shim is the protocol adapter, not the engine. Reads
+run the query layer's plans, and a commit that is read more than once
+is served from its snapshot: the routed (non-quarantine) rows
+projected to the columns the routes return, hash-partitioned by
+``trace_id`` and cached (the in-memory form of the bucket(trace_id)
+serving layout, so the list aggregate plans no shuffle). The first
+read after a commit, from this process or another writer on the same
+root, plans over the table's files; the second builds the snapshot,
+and later reads reuse it. Spark's memory manager bounds the cache and
+spills it to disk. A production deployment would put this class behind
+any WSGI/ASGI front; stdlib ``ThreadingHTTPServer`` keeps the sandbox
+dependency-free.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -53,8 +60,15 @@ from . import grpc_adapter
 from .auth import check_bearer
 from .fixtures import token_df_from_payloads
 from .pipeline import PipelineStores, ingest_batch
+from .queries import NotFound, trace_summary_json
+
+log = logging.getLogger(__name__)
 
 MAX_BODY = 10 * 1024 * 1024  # DefaultBodyLimit, api.rs:65
+
+#: columns of the serving snapshot: everything a read route returns or
+#: filters/orders on
+SNAPSHOT_COLS = ["trace_id", "span_id", "start_time", "end_time", "inner"]
 
 
 def _is_hex_id(s: str) -> bool:
@@ -66,6 +80,15 @@ def _is_hex_id(s: str) -> bool:
         return True
     except ValueError:
         return False
+
+
+def _parse_limit(s: str) -> int:
+    """``?limit=`` as an unsigned integer; ValueError otherwise (the
+    Query extractor's rejection). Values past Spark's int range mean
+    "no limit" in practice and are capped there."""
+    if not (s.isascii() and s.isdigit()):
+        raise ValueError(f"invalid limit: {s!r}")
+    return min(int(s), 2**31 - 1)
 
 
 def _parse_rfc3339(s: str):
@@ -90,13 +113,88 @@ class TraceApi:
         self.token = token
         #: `/api/ws` subscriber hub; serve() installs one
         self.ws_hub = None
+        #: (commit seq, cached frame) of the serving snapshot, the seq
+        #: read once without one, whether a read is building one, and
+        #: how many times close() ran; all under the lock, since the
+        #: HTTP server is multi-threaded
+        self._snapshot: tuple[int, object] | None = None
+        self._read_once: int | None = None
+        self._building = False
+        self._closes = 0
+        self._snapshot_lock = threading.Lock()
 
     def _spans(self):
+        """The routed spans (never the quarantine sink) as of the spans
+        table's latest commit. None for a never-written store.
+
+        The first read of a commit gets the plain plan over the table's
+        files. The second read builds the commit's serving snapshot and
+        every later read reuses it until the commit log moves, so a
+        commit read only once never pays for a build. One read builds at
+        a time; reads that arrive meanwhile take the plain plan instead
+        of waiting for it."""
+        spans = self.stores.spans
+        seq = spans.latest_seq()
+        with self._snapshot_lock:
+            if self._snapshot is not None and self._snapshot[0] == seq:
+                return self._snapshot[1]
+            # seqs only grow: a read that listed the log before a newer
+            # commit was read neither builds nor moves _read_once back
+            build = not self._building and self._read_once == seq
+            if build:
+                self._building = True
+                stale, self._snapshot = self._snapshot, None
+                closes = self._closes
+            elif self._read_once is None or seq > self._read_once:
+                self._read_once = seq
         try:
-            return self.stores.spans.read().filter("signal != 'quarantine'")
-        except ValueError:
-            # never-written store = an empty database, not a 500
-            return None
+            if build and stale is not None:
+                # before caching the new frame: an equal plan (an empty
+                # table after a second truncate) shares the cache entry
+                stale[1].unpersist()
+            try:
+                routed = spans.read(as_of=seq).filter("signal != 'quarantine'")
+            except ValueError:
+                # never-written store = an empty database, not a 500
+                return None
+            return self._build_snapshot(seq, routed, closes) if build else routed
+        finally:
+            if build:
+                with self._snapshot_lock:
+                    self._building = False
+
+    def _build_snapshot(self, seq: int, routed, closes: int):
+        """``routed`` projected to ``SNAPSHOT_COLS``, hash-partitioned by
+        trace_id, cached and materialised (queries planned over a built
+        cache see its partitioning, so the list aggregate plans no
+        Exchange), then installed as the snapshot of ``seq`` unless
+        close() ran meanwhile."""
+        frame = (
+            routed.select(*SNAPSHOT_COLS)
+            .repartition(self.spark.sparkContext.defaultParallelism, "trace_id")
+            .cache()
+        )
+        try:
+            frame.count()
+        except BaseException:
+            frame.unpersist()
+            raise
+        with self._snapshot_lock:
+            if self._closes == closes:
+                self._snapshot = (seq, frame)
+                return frame
+        frame.unpersist()
+        return frame
+
+    def close(self) -> None:
+        """Release the cached snapshot. The API keeps serving; a later
+        read builds a new one."""
+        with self._snapshot_lock:
+            snap, self._snapshot = self._snapshot, None
+            self._read_once = None
+            self._closes += 1
+        if snap is not None:
+            snap[1].unpersist()
 
     # ---- ingest ----
 
@@ -144,19 +242,19 @@ class TraceApi:
             if pairs:
                 self.ws_hub.broadcast(span_added_message(pairs))
         except Exception:
-            pass
+            log.warning("SpanAdded broadcast failed for batch %s", batch_id, exc_info=True)
 
     # ---- reads ----
 
     def _summaries(self, spans, limit=None, time=None) -> list[dict]:
-        """Vec<TraceSummary>: ONE plan (top-k + broadcast semi-join),
-        not the reference's N+1 loop."""
+        """Vec<TraceSummary> in two collects, not the reference's N+1
+        loop: the top-k (trace_id, end_time) rows, then the spans of
+        those ids, grouped and ordered on the driver."""
         from .queries import traces_list
 
-        # collect the top-k ONCE (≤20 ids), then filter the span scan
-        # with the literal id list (pushed-down In filter) — the r3
-        # shape executed the aggregate twice per request: once inside
-        # the semi-join's broadcast subplan, once for the order collect
+        # the second scan filters on the literal id list, so the
+        # aggregate runs once per request (a semi-join against the
+        # top-k plan would run it again inside its broadcast subplan)
         top_rows = traces_list(spans, limit, time).collect()
         order = {r.trace_id: i for i, r in enumerate(top_rows)}
         if not order:
@@ -190,30 +288,25 @@ class TraceApi:
 
     def trace_get(self, trace_id: str) -> tuple[int, object]:
         spans = self._spans()
-        if spans is None:
-            return 404, {"error": "notFound"}
-        got = self._summaries(spans.filter(F.col("trace_id") == trace_id), limit=1)
-        if not got:
-            return 404, {"error": "notFound"}
-        return 200, got[0]
+        if spans is not None:
+            try:
+                return 200, trace_summary_json(spans, trace_id)
+            except NotFound:
+                pass
+        return 404, {"error": "notFound"}
 
     def trace_delete(self, trace_id: str) -> tuple[int, object]:
-        if self._spans() is not None:
-            self.stores.spans.delete_where(f"trace_id = '{trace_id}'")
+        self.stores.spans.delete_where(f"trace_id = '{trace_id}'")
         return 204, None
 
     def span_list(self, trace_id: str) -> tuple[int, object]:
         spans = self._spans()
-        if spans is None:
-            return 200, []
-        rows = (
-            spans
-            .filter(F.col("trace_id") == trace_id)
-            .select("start_time", "inner")
-            .orderBy("start_time")
-            .collect()
-        )
-        return 200, [json.loads(r.inner) for r in rows if r.inner is not None]
+        if spans is not None:
+            try:
+                return 200, trace_summary_json(spans, trace_id)["spans"]
+            except NotFound:
+                pass
+        return 200, []
 
     def span_get(self, trace_id: str, span_id: str) -> tuple[int, object]:
         spans = self._spans()
@@ -231,8 +324,6 @@ class TraceApi:
         return 200, json.loads(rows[0].inner)
 
     def span_delete(self, trace_id: str, span_id: str) -> tuple[int, object]:
-        if self._spans() is None:
-            return 204, None
         self.stores.spans.delete_where(
             f"trace_id = '{trace_id}' AND span_id = '{span_id}'"
         )
@@ -247,7 +338,8 @@ def serve(
 ):
     """Start the HTTP front over a TraceApi; returns the live
     ``ThreadingHTTPServer`` (``.server_address`` has the bound port;
-    ``.ws_hub`` the notification hub; call ``.shutdown()`` to stop).
+    ``.ws_hub`` the notification hub; ``.shutdown()`` stops it and
+    releases the API's cached snapshot).
     ``compress`` mirrors the dev server's CompressionLayer
     (api.rs:87-90, enabled at dev.rs:60): responses gzip when the
     client advertises Accept-Encoding; request bodies ALWAYS inflate
@@ -356,8 +448,11 @@ def serve(
                         status, out, out_ct = api.ingest(body, ctype)
                         return self._send(status, out, out_ct)
                     if method == "GET":
-                        limit = int(q["limit"][0]) if "limit" in q else None
-                        time = _parse_rfc3339(q["time"][0]) if "time" in q else None
+                        try:
+                            limit = _parse_limit(q["limit"][0]) if "limit" in q else None
+                            time = _parse_rfc3339(q["time"][0]) if "time" in q else None
+                        except ValueError:
+                            return self._send(400)  # Query rejection
                         return self._send_json(*api.traces_list(limit, time))
                     return self._send(405)
                 if not _is_hex_id(rest[0]):
@@ -473,7 +568,12 @@ def serve(
         def do_DELETE(self):
             self._route("DELETE")
 
-    server = ThreadingHTTPServer((host, port), Handler)
+    class Server(ThreadingHTTPServer):
+        def shutdown(self):
+            super().shutdown()
+            api.close()
+
+    server = Server((host, port), Handler)
     server.ws_hub = hub
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()

@@ -29,10 +29,13 @@ DEFAULT_TRACE_LIMIT = 20  # limit.unwrap_or(20), data/sql.rs:83
 def traces_list(spans: DataFrame, limit: int | None = None, time=None) -> DataFrame:
     """A1+O1+F3: ``SELECT trace_id, MAX(end_time) AS end_time FROM spans
     [WHERE end_time <= t] GROUP BY trace_id ORDER BY end_time DESC
-    LIMIT k`` (data/sql.rs:82-101).
+    LIMIT k`` (data/sql.rs:82-101); only a missing ``limit`` defaults
+    to 20 (``limit=0`` is an empty page).
 
     Partial hash-agg map-side, shuffle on trace_id, final agg, then
-    top-k (TakeOrderedAndProject — no global sort). trace_id is the
+    top-k (TakeOrderedAndProject — no global sort). Over a frame
+    already hash-partitioned by trace_id (the read API's serving
+    snapshot, a bucketed table) the shuffle drops out. trace_id is the
     deterministic tiebreaker the reference leaves to SQLite's whim.
     """
     df = spans
@@ -42,7 +45,7 @@ def traces_list(spans: DataFrame, limit: int | None = None, time=None) -> DataFr
         df.groupBy("trace_id")
         .agg(F.max("end_time").alias("end_time"))
         .orderBy(F.desc("end_time"), F.desc("trace_id"))
-        .limit(limit or DEFAULT_TRACE_LIMIT)
+        .limit(DEFAULT_TRACE_LIMIT if limit is None else limit)
     )
 
 
@@ -103,17 +106,17 @@ def trace_summary_json(spans: DataFrame, trace_id: str) -> dict:
     (otel.rs:295-318; spans round-trip through the ``inner`` column
     exactly like the reference re-parses its TEXT column,
     data/models.rs:31-44). Raises NotFound on an unknown/empty trace.
+
+    One filter-and-collect; the rows of the one trace are ordered by
+    start time on the driver (nulls first, as ``orderBy`` would), which
+    spares the range-partition sampling job a Spark sort adds.
     """
     import json as _json
 
-    rows = (
-        span_list_by_trace(spans, trace_id)
-        .select("start_time", "inner")
-        .orderBy("start_time")
-        .collect()
-    )
+    rows = span_list_by_trace(spans, trace_id).select("start_time", "inner").collect()
     if not rows:
         raise NotFound(f"trace {trace_id}")
+    rows.sort(key=lambda r: (r.start_time is not None, r.start_time))
     return {
         "traceId": trace_id,
         "spans": [_json.loads(r.inner) for r in rows if r.inner is not None],

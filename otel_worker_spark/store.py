@@ -62,6 +62,15 @@ class TableStore:
                 out.append(json.load(f))
         return out
 
+    def latest_seq(self) -> int:
+        """Seq of the newest commit (-1 for an empty log), from one
+        directory listing — no entry is parsed. Every commit moves it,
+        so it keys caches of the table's current snapshot."""
+        return max(
+            (int(n.split(".")[0]) for n in os.listdir(self.log_dir) if n.endswith(".json")),
+            default=-1,
+        )
+
     def _commit(self, entry: dict) -> None:
         """Create-exclusive publish with seq retry: ``os.link`` (unlike
         ``os.rename``, which silently overwrites) fails with
@@ -74,8 +83,7 @@ class TableStore:
         entry["committed_at"] = time.time()
         tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}")
         while True:
-            names = [n for n in os.listdir(self.log_dir) if n.endswith(".json")]
-            seq = max((int(n.split(".")[0]) for n in names), default=-1) + 1
+            seq = self.latest_seq() + 1
             entry["seq"] = seq
             with open(tmp, "w") as f:
                 json.dump(entry, f)

@@ -88,6 +88,16 @@ def test_http_round_trip(server):
     )
     assert status == 404 and json.loads(out) == {"error": "spanNotFound"}
 
+    # only a missing limit defaults to 20: limit=0 is an empty page;
+    # a limit or time the Query extractor can't parse → 400, not 500
+    status, out, _ = _req(base, "/v1/traces?limit=0")
+    assert status == 200 and json.loads(out) == []
+    assert _req(base, "/v1/traces?limit=abc")[0] == 400
+    assert _req(base, "/v1/traces?limit=-1")[0] == 400
+    assert _req(base, "/v1/traces?time=yesterday")[0] == 400
+    status, out, _ = _req(base, "/v1/traces?limit=99999999999")
+    assert status == 200 and len(json.loads(out)) == 1
+
     # HexEncodedId path rejection → 400; router fallback → 404
     assert _req(base, "/v1/traces/not-hex")[0] == 400
     assert _req(base, f"/v1/traces/{GOLDEN_TRACE_ID}/spans/zz")[0] == 400
@@ -97,6 +107,9 @@ def test_http_round_trip(server):
 
 def test_http_deletes(server):
     base, _api = server
+    # a never-written store deletes nothing, without error
+    assert _req(base, f"/v1/traces/{GOLDEN_TRACE_ID}", "DELETE")[0] == 204
+    assert _req(base, f"/v1/traces/{GOLDEN_TRACE_ID}/spans/{GOLDEN_CHILD_SPAN_ID}", "DELETE")[0] == 204
     _ingest_golden(base)
     status, out, _ = _req(
         base,
@@ -114,6 +127,152 @@ def test_http_deletes(server):
     assert status == 204
     assert _req(base, f"/v1/traces/{GOLDEN_TRACE_ID}")[0] == 404
     assert json.loads(_req(base, "/v1/traces")[1]) == []
+
+
+def test_reads_reuse_one_snapshot_per_commit(spark, tmp_root, monkeypatch):
+    """A commit's first read plans over the files and its second builds
+    the cached snapshot; later reads reuse it without reading the table.
+    This process's next commit replaces it, and shutting the server down
+    releases it."""
+    stores = PipelineStores(spark, tmp_root + "/stores")
+    api = TraceApi(spark, stores, service_lookup_df(spark))
+    srv = serve(api)
+    base = "http://%s:%d" % srv.server_address
+    try:
+        _ingest_golden(base)
+        reads = []
+        real_read = stores.spans.read
+        monkeypatch.setattr(
+            stores.spans, "read", lambda *a, **k: reads.append(k) or real_read(*a, **k)
+        )
+        assert not api._spans().is_cached
+        snap = api._spans()
+        assert snap.is_cached
+        assert _req(base, "/v1/traces")[0] == 200
+        assert _req(base, f"/v1/traces/{GOLDEN_TRACE_ID}")[0] == 200
+        assert _req(base, f"/v1/traces/{GOLDEN_TRACE_ID}/spans/{GOLDEN_CHILD_SPAN_ID}")[0] == 200
+        assert api._spans() is snap
+        assert reads == [{"as_of": stores.spans.latest_seq()}] * 2
+
+        _req(base, f"/v1/traces/{GOLDEN_TRACE_ID}/spans/{GOLDEN_CHILD_SPAN_ID}", "DELETE")
+        assert not api._spans().is_cached and snap.is_cached
+        fresh = api._spans()
+        assert fresh is not snap and not snap.is_cached and fresh.is_cached
+        assert reads[-1] == {"as_of": stores.spans.latest_seq()}
+    finally:
+        srv.shutdown()
+    assert not fresh.is_cached and api._snapshot is None
+
+
+def test_reads_do_not_wait_for_a_snapshot_build(server, monkeypatch):
+    """While one read builds the snapshot, other reads of the same
+    commit answer from the plan over the files instead of waiting."""
+    import threading
+
+    base, api = server
+    _ingest_golden(base)
+    assert api.trace_get(GOLDEN_TRACE_ID)[0] == 200  # first read: no build
+    started, release = threading.Event(), threading.Event()
+    real_build = api._build_snapshot
+
+    def held_build(*a):
+        started.set()
+        assert release.wait(120)
+        return real_build(*a)
+
+    monkeypatch.setattr(api, "_build_snapshot", held_build)
+    build_status = []
+    build_read = threading.Thread(
+        target=lambda: build_status.append(api.trace_get(GOLDEN_TRACE_ID)[0])
+    )
+    build_read.start()
+    try:
+        assert started.wait(120)
+        assert not api._spans().is_cached
+        assert [t["traceId"] for t in json.loads(_req(base, "/v1/traces")[1])] == [
+            GOLDEN_TRACE_ID
+        ]
+        assert api.span_get(GOLDEN_TRACE_ID, GOLDEN_CHILD_SPAN_ID)[0] == 200
+    finally:
+        release.set()
+        build_read.join(timeout=120)
+    assert not build_read.is_alive() and build_status == [200]
+    assert api._spans().is_cached
+
+
+OTHER_TRACE_ID = "cd" * 16
+
+
+def _commit_from_another_writer(spark, root):
+    """The golden spans under OTHER_TRACE_ID, committed through a
+    second PipelineStores on the same root."""
+    from otel_worker_spark.fixtures import token_df_from_payloads
+    from otel_worker_spark.pipeline import ingest_batch
+
+    env = golden_trace_envelope()
+    for sp in env["resourceSpans"][0]["scopeSpans"][0]["spans"]:
+        sp["traceId"] = OTHER_TRACE_ID
+    tok = token_df_from_payloads(spark, [json.dumps(env, separators=(",", ":"))])
+    ingest_batch(spark, tok, service_lookup_df(spark), PipelineStores(spark, root), "other")
+
+
+def test_reads_see_another_writers_commit(server, spark, tmp_root):
+    """A batch committed by another writer on the same root shows up on
+    the next request, although this process serves a snapshot."""
+    base, api = server
+    _ingest_golden(base)
+    for _ in range(2):
+        assert [t["traceId"] for t in json.loads(_req(base, "/v1/traces")[1])] == [
+            GOLDEN_TRACE_ID
+        ]
+    assert api._spans().is_cached
+    _commit_from_another_writer(spark, tmp_root + "/stores")
+    for _ in range(2):  # the plan over the files, then the new snapshot
+        listed = {t["traceId"] for t in json.loads(_req(base, "/v1/traces")[1])}
+        assert listed == {GOLDEN_TRACE_ID, OTHER_TRACE_ID}
+        status, out, _ = _req(base, "/v1/traces/" + OTHER_TRACE_ID)
+        assert status == 200 and len(json.loads(out)["spans"]) == 2
+
+
+def test_concurrent_reads_build_each_snapshot_once(server, spark, tmp_root, monkeypatch):
+    """Reads from more threads than cores race a commit by another
+    writer: every read answers, the commit is visible afterwards, and
+    no commit's snapshot is built twice (the build claim is
+    check-then-act)."""
+    import os
+    import sys
+    import threading
+
+    base, api = server
+    _ingest_golden(base)
+    built = []
+    real_build = api._build_snapshot
+    monkeypatch.setattr(
+        api, "_build_snapshot", lambda seq, *a: built.append(seq) or real_build(seq, *a)
+    )
+    statuses = []
+
+    def reader():
+        for _ in range(3):
+            statuses.append(api.trace_get(GOLDEN_TRACE_ID)[0])
+
+    threads = [threading.Thread(target=reader) for _ in range(2 * (os.cpu_count() or 2))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        _commit_from_another_writer(spark, tmp_root + "/stores")
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert statuses == [200] * 3 * len(threads)
+    for _ in range(2):
+        assert len(api.span_list(OTHER_TRACE_ID)[1]) == 2
+    assert built and len(built) == len(set(built))
+    assert built[-1] == api.stores.spans.latest_seq()
 
 
 def test_http_ingest_idempotent_and_protobuf(server, spark):

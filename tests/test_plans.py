@@ -274,6 +274,31 @@ def test_bucketed_layout_removes_trace_shuffles(spark, tmp_root):
         spark.sql("DROP TABLE IF EXISTS spans_bucketed")
 
 
+def test_serving_snapshot_removes_traces_list_shuffle(spark, tmp_root):
+    """The read API's serving snapshot is hash-partitioned by trace_id
+    and cached, so the traces_list aggregate over it plans no Exchange
+    (only the snapshot's own build, inside the cached relation, has
+    one); the same query over the store's files does."""
+    import os
+
+    from otel_worker_spark.api import TraceApi
+    from otel_worker_spark.pipeline import PipelineStores, ingest_batch
+
+    stores = PipelineStores(spark, os.path.join(tmp_root, "stores"))
+    tok = token_sequences_from_events(spark, SF_DIR)
+    ingest_batch(spark, tok, service_lookup_df(spark), stores, batch_id=0)
+    api = TraceApi(spark, stores, service_lookup_df(spark))
+    api._spans()  # a commit's first read plans over the files
+    snap = api._spans()
+    above_cache = plan_of(traces_list(snap)).split("InMemoryRelation")[0]
+    assert "InMemoryTableScan" in above_cache
+    assert "Exchange" not in above_cache
+    assert above_cache.count("HashAggregate") >= 2  # partial + final, no shuffle
+    flat = stores.spans.read().filter("signal != 'quarantine'")
+    assert "Exchange hashpartitioning" in plan_of(traces_list(flat))
+    api.close()
+
+
 def test_repetition_is_zero_shuffle(spark):
     """r4 rework: Gopher repetition stats fold a sorted gram array
     per row — the explode->groupBy(doc_id, gram) form shuffled ~850

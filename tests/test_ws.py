@@ -117,6 +117,40 @@ def test_ws_upgrade_broadcast_ping_close(spark, tmp_root):
         srv.shutdown()
 
 
+def test_failed_span_added_broadcast_is_logged(spark, tmp_root, monkeypatch, caplog):
+    """A SpanAdded broadcast that fails (here: the manifest read) never
+    fails the ingest, but leaves a warning with the traceback."""
+    import logging
+    import urllib.request
+
+    stores = PipelineStores(spark, tmp_root + "/stores")
+    api = TraceApi(spark, stores, service_lookup_df(spark))
+
+    def broken_read_batch(batch_id):
+        raise OSError("manifest unreadable")
+
+    monkeypatch.setattr(stores.manifest, "read_batch", broken_read_batch)
+    srv = serve(api)
+    try:
+        host, port = srv.server_address
+        sock, _headers, _key = _ws_connect(host, port)
+        assert srv.ws_hub.connection_count() == 1
+        body = json.dumps(golden_trace_envelope(), separators=(",", ":")).encode()
+        req = urllib.request.Request(
+            f"http://{host}:{port}/v1/traces", data=body, method="POST"
+        )
+        req.add_header("Content-Type", "application/json")
+        with caplog.at_level(logging.WARNING, logger="otel_worker_spark.api"):
+            with urllib.request.urlopen(req) as resp:
+                assert resp.status == 200
+        sock.close()
+    finally:
+        srv.shutdown()
+    (rec,) = [r for r in caplog.records if r.name == "otel_worker_spark.api"]
+    assert rec.levelno == logging.WARNING and "SpanAdded" in rec.getMessage()
+    assert rec.exc_info and "manifest unreadable" in str(rec.exc_info[1])
+
+
 def test_ws_route_requires_upgrade_header(spark, tmp_root):
     stores = PipelineStores(spark, tmp_root + "/stores")
     api = TraceApi(spark, stores, service_lookup_df(spark))
