@@ -5,12 +5,14 @@ Measures the north-rule metric — end-to-end parse → enrich → route →
 aggregate throughput in sequences/sec over the token table — plus the
 headline read-side and training-data queries, and evidences the
 two-cluster-size scaling criterion by re-running the identical job at
-a second parallelism level (local[N/4]) in a subprocess (no real
-cluster in this sandbox; see BASELINE.md measurement protocol).
+two parallelism levels no larger than N (SCALE_LOW, SCALE_HIGH) in
+subprocesses (no real cluster in this sandbox; see BASELINE.md
+measurement protocol).
 
 Env:
   SPARK_GRAFT_SF_DIR   input tables (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     primary parallelism (default 32)
+  SPARK_GRAFT_CPUS     primary parallelism (default: the cores this
+                       process may run on, as nproc reports)
   BENCH_SCALING=0      skip the second-level scaling run
   BENCH_SINGLE_CORES   (internal) run one measurement and exit
   BENCH_CLEAN_TOL      clean-window probe tolerance (default 0.72)
@@ -31,20 +33,19 @@ import tempfile
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 N_TIMED_RUNS = 2
 
-#: Scaling pair (N vs 4N). On this 32-core box each pipeline task
-#: occupies ~2 effective cores (1 JVM + 1 Python worker), so the pair
-#: must keep BOTH levels on dedicated cores with OS/GC headroom — the
-#: cluster-faithful setup (a real deployment sizes executors so task
-#: slots don't oversubscribe). local[2]/local[8] = 4/16 effective
-#: cores of 32; measured per-effective-core throughput is flat
-#: (4.7-5.0k seq/s) across local[2]/local[8]/local[16], while
-#: local[16] as the high level brushes whole-box saturation and
-#: local[32] loses ~2x outright to JVM+Python contention.
-SCALE_LOW = int(os.environ.get("BENCH_SCALE_LOW", "2"))
-SCALE_HIGH = int(os.environ.get("BENCH_SCALE_HIGH", "8"))
+#: Scaling pair. Each pipeline task occupies ~2 effective cores (1 JVM
+#: + 1 Python worker), so the pair must keep BOTH levels on dedicated
+#: cores with OS/GC headroom — the cluster-faithful setup (a real
+#: deployment sizes executors so task slots don't oversubscribe). On a
+#: 32-core box local[2]/local[8] = 4/16 effective cores; measured
+#: per-effective-core throughput there is flat (4.7-5.0k seq/s) across
+#: local[2]/local[8]/local[16], while local[32] loses ~2x outright to
+#: JVM+Python contention. The high level never exceeds CPUS.
+SCALE_HIGH = int(os.environ.get("BENCH_SCALE_HIGH") or min(8, CPUS))
+SCALE_LOW = int(os.environ.get("BENCH_SCALE_LOW") or max(1, min(2, SCALE_HIGH // 2)))
 #: input replication for the scaling measurement — amortizes per-job
 #: fixed costs (~5-8 s: scheduling, Python worker spin-up, AQE
 #: planning) that otherwise cap measurable efficiency; after the

@@ -4,10 +4,13 @@ A brand-new engine (NOT a port) with the query and data-processing
 capabilities of the reference `fiberplane/otel-worker` (a Rust OTLP
 collector, see /root/reference), re-expressed Spark-first:
 
-- parse:   vectorized detokenize (pandas/Arrow UDF) + JVM-side
-           ``from_json`` + explode chain (the reference's
+- parse:   one ``mapInArrow`` kernel (``parse_arrow``, the pipeline's
+           default) that detokenizes, parses and flattens each batch
+           into span rows (the reference's
            ``Span::from_collector_request`` triple flatten,
-           otel-worker-core/src/api/models/otel.rs:49-118)
+           otel-worker-core/src/api/models/otel.rs:49-118); ``parse`` is
+           the pure-Catalyst twin (``from_json`` + explode chain) and
+           ``proto`` the OTLP-protobuf kernel
 - enrich:  broadcast hash-join against service lookup dims
 - route:   per-signal fan-out (traces / logs / metrics) with per-sink
            count + sum receipts (otel-worker-core/src/service.rs:32-54)
@@ -26,4 +29,11 @@ Everything here derives from public knowledge only: the Apache Spark /
 PySpark API and the public reference repo.
 """
 
+from . import worker_imports as _worker_imports
+
 __version__ = "0.1.0"
+
+# inside a PySpark task (a worker unpickling one of our kernels) this
+# spares every later task in the worker a re-read of pyspark.zip, py4j
+# and the spark-core jar; a no-op on the driver and on CPython >= 3.12
+_worker_imports.install()

@@ -209,7 +209,9 @@ class TraceApi:
             payloads = [json.dumps(env, separators=(",", ":"))]
             ok_body, ok_ct = b"", "application/x-protobuf"
         else:
-            payloads = [body.decode("utf-8")]
+            # the bytes as sent: a body that is not UTF-8 quarantines as
+            # undecodable_payload in the parse kernel, like malformed JSON
+            payloads = [body]
             # ExportTraceServiceResponse{partial_success: None} → "{}"
             ok_body, ok_ct = b"{}", "application/json"
         # batch id = payload digest: re-delivery of the same export is
@@ -312,11 +314,12 @@ class TraceApi:
         spans = self._spans()
         if spans is None:
             return 404, {"error": "spanNotFound"}
+        # one job: limit(1) would plan a CollectLimit, whose incremental
+        # take runs a job per round of partitions until a row turns up
         rows = (
             spans
             .filter((F.col("trace_id") == trace_id) & (F.col("span_id") == span_id))
             .select("inner")
-            .limit(1)
             .collect()
         )
         if not rows or rows[0].inner is None:

@@ -373,13 +373,18 @@ def tokens_of(payload: str) -> list[int]:
 
 
 def token_df_from_payloads(
-    spark: SparkSession, payloads: list[str | dict], source: str = "test-service"
+    spark: SparkSession, payloads: list[str | bytes | dict], source: str = "test-service"
 ) -> DataFrame:
-    """Small hand-built token_sequences frames for unit tests."""
+    """Small hand-built token_sequences frames (unit tests, API ingest).
+    ``bytes`` payloads become tokens as they are, so a body that is not
+    UTF-8 reaches the parse kernel, which quarantines it."""
     rows = []
     for i, p in enumerate(payloads):
-        text = p if isinstance(p, str) else json.dumps(p, separators=(",", ":"))
-        toks = tokens_of(text)
+        if isinstance(p, bytes):
+            toks = list(p)
+        else:
+            text = p if isinstance(p, str) else json.dumps(p, separators=(",", ":"))
+            toks = tokens_of(text)
         rows.append((f"doc-{i:08d}", toks, len(toks), source))
     return spark.createDataFrame(
         rows, "doc_id string, tokens array<int>, n_tok int, source string"

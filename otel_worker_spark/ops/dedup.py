@@ -157,25 +157,27 @@ def _minhash_fold_arrow(hashed: DataFrame, n_perms: int) -> DataFrame:
     A = np.array([a for a, _ in perms], dtype=np.int64)[:, None]
     B = np.array([b for _, b in perms], dtype=np.int64)[:, None]
 
-    n_perms_out = A.shape[0]
-
     def kernel(batches):
         for pdf in batches:
-            sigs = []
-            for hs in pdf["hs"]:
-                arr = np.asarray(hs if hs is not None else [], dtype=np.int64)
-                if arr.size == 0:
-                    # behavioral parity with the Catalyst path, where
-                    # array_min over an empty fold yields NULL per perm
-                    # — an empty hash array must not kill the task
-                    # (r5 ADVICE item 3; latent today: shingles_expr
-                    # guarantees ≥1 shingle)
-                    sigs.append([None] * n_perms_out)
-                    continue
-                sigs.append(((A * arr[None, :] + B) % MERSENNE31).min(axis=1))
+            sigs = [_minhash_fold_row(hs, A, B) for hs in pdf["hs"]]
             yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "sig": sigs})
 
     return hashed.mapInPandas(kernel, "doc_id long, sig array<long>")
+
+
+def _minhash_fold_row(hs, A, B):
+    """One doc's P min-folds. Module level, so a worker unpickling the
+    fold kernel imports this package (``worker_imports``)."""
+    import numpy as np
+
+    arr = np.asarray(hs if hs is not None else [], dtype=np.int64)
+    if arr.size == 0:
+        # behavioral parity with the Catalyst path, where array_min
+        # over an empty fold yields NULL per perm — an empty hash array
+        # must not kill the task (r5 ADVICE item 3; latent today:
+        # shingles_expr guarantees ≥1 shingle)
+        return [None] * A.shape[0]
+    return ((A * arr[None, :] + B) % MERSENNE31).min(axis=1)
 
 
 def minhash_signatures(

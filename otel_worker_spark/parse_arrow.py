@@ -1,4 +1,4 @@
-"""The Arrow parse engine: the whole parse stage in one mapInPandas
+"""The Arrow parse engine: the whole parse stage in one mapInArrow
 kernel — the north rule's prescribed shape ("vectorized pandas/Arrow
 UDFs perform grok/regex-style parsing of serialized OTLP-like
 payloads reconstructed from token arrays, extract trace_id / span_id /
@@ -482,12 +482,18 @@ def _parse_one_bytes(
     """Parse from the zero-copy int array slice. ``need`` lists the
     heavy fields to actually build; ``payload`` (the raw bytes) is
     attached to every emitted row when requested."""
-    if seg.size and (seg.min() < 0 or seg.max() > 255):
-        # out-of-vocab tokens: no byte representation exists
+    raw = _segment_bytes(seg)
+    if raw is None:
         return _null_row(doc_id, None, n_tok, source, "undecodable_payload")
-    return _parse_one_raw(
-        doc_id, seg.astype(np.uint8).tobytes(), n_tok, source, with_inner, need
-    )
+    return _parse_one_raw(doc_id, raw, n_tok, source, with_inner, need)
+
+
+def _segment_bytes(seg) -> bytes | None:
+    """One row's int tokens as payload bytes; None when any token lies
+    outside the byte vocab (0..255) and no byte representation exists."""
+    if seg.size and (seg.min() < 0 or seg.max() > 255):
+        return None
+    return seg.astype(np.uint8).tobytes()
 
 
 def _parse_one_raw(

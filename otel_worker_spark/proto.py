@@ -470,13 +470,16 @@ def parse_token_sequences_protobuf(
                     tok_col = tok_col.combine_chunks()
                 offsets = tok_col.offsets.to_numpy(zero_copy_only=False)
                 values = tok_col.values.to_numpy(zero_copy_only=False)
-                # one vectorized vocab check + uint8 conversion for the
-                # whole batch (parse_arrow's r7 shape); per-row min/max
-                # only when the batch holds any out-of-vocab token
-                all_bytes = values.size == 0 or (
-                    values.min() >= 0 and values.max() <= 255
+                # one vectorized vocab check + uint8 conversion over the
+                # rows' own window of the values child (parse_arrow's
+                # shape: a sliced ListArray's hidden tokens neither force
+                # the per-row path nor get copied)
+                lo = offsets[0]
+                visible = values[lo : offsets[-1]]
+                all_bytes = visible.size == 0 or (
+                    visible.min() >= 0 and visible.max() <= 255
                 )
-                vals_u8 = values.astype(np.uint8) if all_bytes else None
+                vals_u8 = visible.astype(np.uint8) if all_bytes else None
             doc_ids = rb.column(names.index("doc_id")).to_pylist()
             n_toks = rb.column(names.index("n_tok")).to_pylist() if "n_tok" in names else [None] * rb.num_rows
             sources = rb.column(names.index("source")).to_pylist() if "source" in names else [None] * rb.num_rows
@@ -486,17 +489,12 @@ def parse_token_sequences_protobuf(
                 if binary_col:
                     raw = payloads[i]
                 elif all_bytes:
-                    raw = vals_u8[offsets[i] : offsets[i + 1]].tobytes()
+                    raw = vals_u8[offsets[i] - lo : offsets[i + 1] - lo].tobytes()
                 else:
-                    seg = values[offsets[i] : offsets[i + 1]]
-                    if seg.size and (seg.min() < 0 or seg.max() > 255):
-                        rows.extend(PA._null_row(
-                            doc_ids[i], None, n_toks[i], sources[i], "undecodable_payload"
-                        ))
-                        continue
-                    raw = seg.astype(np.uint8).tobytes()
+                    raw = PA._segment_bytes(values[offsets[i] : offsets[i + 1]])
+                # a null payload cell or out-of-vocab tokens: no bytes
                 try:
-                    env = decode_export_request(raw)
+                    env = None if raw is None else decode_export_request(raw)
                 except WireError:
                     env = None
                 if env is None:

@@ -132,6 +132,42 @@ def mcp_resources_list(spans: DataFrame) -> DataFrame:
     return traces_list(spans, limit=MCP_RESOURCES_PAGE)
 
 
+def _assemble_trace_tree(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    """One trace's spans → its tree rows (``build_trace_tree``). Module
+    level, so a worker unpickling it imports this package
+    (``worker_imports``)."""
+    import pandas as pd
+
+    trace_id = pdf["trace_id"].iloc[0]
+    parent = dict(zip(pdf["span_id"], pdf["parent_span_id"]))
+    children: dict[str, list[str]] = {}
+    roots = []
+    for s, p in parent.items():
+        if p is None or (isinstance(p, float)) or p not in parent:
+            roots.append(s)
+        else:
+            children.setdefault(p, []).append(s)
+    rows = []
+    visited: set[str] = set()
+    stack = [(r, 0, r) for r in sorted(roots, reverse=True)]
+    while stack:
+        s, d, path = stack.pop()
+        if s in visited:
+            continue
+        visited.add(s)
+        p = parent.get(s)
+        rows.append((trace_id, s, None if isinstance(p, float) else p, d, path))
+        for c in sorted(children.get(s, []), reverse=True):
+            stack.append((c, d + 1, path + "/" + c))
+    # cycle fallback: anything unreached becomes its own root
+    for s in sorted(set(parent) - visited):
+        p = parent.get(s)
+        rows.append((trace_id, s, None if isinstance(p, float) else p, 0, s))
+    return pd.DataFrame(
+        rows, columns=["trace_id", "span_id", "parent_span_id", "depth", "path"]
+    )
+
+
 def build_trace_tree(spans: DataFrame) -> DataFrame:
     """The trace-tree consumer of the J3 index (r1 verdict item 8):
     nests spans into the parent/child hierarchy the reference's
@@ -153,43 +189,11 @@ def build_trace_tree(spans: DataFrame) -> DataFrame:
     place); one shuffle on trace_id, which bucket(trace_id) storage
     removes. The per-group assembly is O(spans in trace).
     """
-    import pandas as pd
-
-    def assemble(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        trace_id = pdf["trace_id"].iloc[0]
-        parent = dict(zip(pdf["span_id"], pdf["parent_span_id"]))
-        children: dict[str, list[str]] = {}
-        roots = []
-        for s, p in parent.items():
-            if p is None or (isinstance(p, float)) or p not in parent:
-                roots.append(s)
-            else:
-                children.setdefault(p, []).append(s)
-        rows = []
-        visited: set[str] = set()
-        stack = [(r, 0, r) for r in sorted(roots, reverse=True)]
-        while stack:
-            s, d, path = stack.pop()
-            if s in visited:
-                continue
-            visited.add(s)
-            p = parent.get(s)
-            rows.append((trace_id, s, None if isinstance(p, float) else p, d, path))
-            for c in sorted(children.get(s, []), reverse=True):
-                stack.append((c, d + 1, path + "/" + c))
-        # cycle fallback: anything unreached becomes its own root
-        for s in sorted(set(parent) - visited):
-            p = parent.get(s)
-            rows.append((trace_id, s, None if isinstance(p, float) else p, 0, s))
-        return pd.DataFrame(
-            rows, columns=["trace_id", "span_id", "parent_span_id", "depth", "path"]
-        )
-
     return (
         spans.select("trace_id", "span_id", "parent_span_id")
         .groupBy("trace_id")
         .applyInPandas(
-            assemble,
+            _assemble_trace_tree,
             schema="trace_id string, span_id string, parent_span_id string, depth int, path string",
         )
     )

@@ -164,6 +164,27 @@ def test_reads_reuse_one_snapshot_per_commit(spark, tmp_root, monkeypatch):
     assert not fresh.is_cached and api._snapshot is None
 
 
+def test_span_get_runs_one_job(server, spark):
+    """A point read over a warm snapshot is one Spark job, whichever
+    partition holds the span, and answers as before."""
+    base, api = server
+    _ingest_golden(base)
+    api._spans(), api._spans()  # plain read, then the snapshot build
+    tracker = spark.sparkContext.statusTracker()
+    for span_id in (GOLDEN_ROOT_SPAN_ID, GOLDEN_CHILD_SPAN_ID, "ee" * 8):
+        group = f"span-get-{span_id}"
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            status, body = api.span_get(GOLDEN_TRACE_ID, span_id)
+        finally:
+            spark.sparkContext.setJobGroup("", "")
+        assert len(tracker.getJobIdsForGroup(group)) == 1
+        if span_id == "ee" * 8:
+            assert (status, body) == (404, {"error": "spanNotFound"})
+        else:
+            assert status == 200 and body["spanId"] == span_id
+
+
 def test_reads_do_not_wait_for_a_snapshot_build(server, monkeypatch):
     """While one read builds the snapshot, other reads of the same
     commit answer from the plan over the files instead of waiting."""
@@ -295,6 +316,20 @@ def test_http_ingest_idempotent_and_protobuf(server, spark):
     )
     assert status == 200 and out == b""
     assert len(json.loads(_req(base, "/v1/traces/" + "cd" * 16 + "/spans")[1])) == 2
+
+
+def test_http_ingest_non_utf8_json_quarantines(server):
+    """A JSON body that is not UTF-8 answers 200 like malformed JSON and
+    lands as one undecodable_payload quarantine row."""
+    base, api = server
+    body = b'{"resourceSpans":[{"x":"\xff\xfe"}]}'
+    status, out, _ = _req(
+        base, "/v1/traces", "POST", body, {"Content-Type": "application/json"}
+    )
+    assert status == 200 and out == b"{}"
+    rows = api.stores.spans.read().filter("signal = 'quarantine'").collect()
+    assert [(r.invalid_reason, r.n_tok) for r in rows] == [("undecodable_payload", len(body))]
+    assert json.loads(_req(base, "/v1/traces")[1]) == []
 
 
 def test_http_auth_gate(spark, tmp_root):

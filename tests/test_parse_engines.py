@@ -1,4 +1,4 @@
-"""The two parse engines (Catalyst expressions vs Arrow mapInPandas
+"""The two parse engines (Catalyst expressions vs Arrow mapInArrow
 kernel) must produce identical frames — same columns, same values,
 row for row — on golden, events-derived, and poison inputs."""
 
@@ -263,5 +263,41 @@ def test_arrow_kernel_sliced_tokens_ignore_hidden_values(monkeypatch):
         raise AssertionError("sliced batch left the byte fast path")
 
     monkeypatch.setattr(PA, "_parse_one_bytes", slow_path)
+    got = pa.Table.from_batches(list(kernel(iter([sliced]))))
+    assert got.num_rows == 4 and got.equals(want)
+
+
+def test_protobuf_kernel_sliced_tokens_ignore_hidden_values(monkeypatch):
+    """The protobuf kernel's token path applies the same visible-window
+    check: hidden out-of-vocab tokens of a sliced ListArray keep the
+    batch on the byte fast path, with the compact copy's frame."""
+    import pyarrow as pa
+
+    from otel_worker_spark import parse_arrow as PA
+    from otel_worker_spark.proto import encode_export_request, parse_token_sequences_protobuf
+
+    class Capture:
+        def mapInArrow(self, kernel, schema):
+            return kernel
+
+    good = list(encode_export_request(golden_trace_envelope()))
+    toks = [[300, -5], good, good, [999]]
+    full = pa.RecordBatch.from_pydict({
+        "doc_id": [f"doc-{i}" for i in range(len(toks))],
+        "tokens": pa.array(toks, pa.list_(pa.int32())),
+        "n_tok": pa.array([len(t) for t in toks], pa.int32()),
+        "source": ["s"] * len(toks),
+    })
+    sliced = full.slice(1, 2)
+    assert sliced.column(1).offsets[0].as_py() > 0  # hidden values exist
+    compact = pa.RecordBatch.from_pylist(sliced.to_pylist(), schema=full.schema)
+    kernel = parse_token_sequences_protobuf(Capture())
+    want = pa.Table.from_batches(list(kernel(iter([compact]))))
+
+    def slow_path(*args, **kwargs):
+        raise AssertionError("sliced batch left the byte fast path")
+
+    # the per-row path converts each row through this helper
+    monkeypatch.setattr(PA, "_segment_bytes", slow_path)
     got = pa.Table.from_batches(list(kernel(iter([sliced]))))
     assert got.num_rows == 4 and got.equals(want)

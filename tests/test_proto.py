@@ -189,18 +189,29 @@ def test_protobuf_inner_matches_json_inner(spark):
 
 def test_protobuf_binary_column_input(spark):
     """read_otlp_protobuf table shape: a `payload` binary column parses
-    identically to the token-array form."""
+    identically to the token-array form. A null payload cell quarantines
+    as one undecodable_payload row instead of failing the batch."""
     env = golden_trace_envelope()
     wire = encode_export_request(env)
     df = spark.createDataFrame(
-        [("d0", bytearray(wire), len(wire), "svc")],
+        [
+            ("d0", bytearray(wire), len(wire), "svc"),
+            ("d1", None, None, "svc"),
+            ("d2", None, 0, "svc"),
+        ],
         "doc_id string, payload binary, n_tok int, source string",
     )
     out = parse_token_sequences_protobuf(df).toPandas()
-    assert len(out) == 2
-    assert out["is_valid"].all()
-    assert all(bytes(p) == wire for p in out["payload"])  # exact bytes carried
-    assert set(out["name"]) == {"GET /api/users", "database.query"}
+    good = out[out["doc_id"] == "d0"]
+    assert len(good) == 2
+    assert good["is_valid"].all()
+    assert all(bytes(p) == wire for p in good["payload"])  # exact bytes carried
+    assert set(good["name"]) == {"GET /api/users", "database.query"}
+    bad = out[out["doc_id"] != "d0"].sort_values("doc_id")
+    assert list(bad["doc_id"]) == ["d1", "d2"]
+    assert not bad["is_valid"].any()
+    assert set(bad["invalid_reason"]) == {"undecodable_payload"}
+    assert bad["payload"].isna().all() and bad["span_id"].isna().all()
 
 
 def test_protobuf_scalar_defaults(spark):
