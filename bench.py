@@ -13,13 +13,16 @@ Env:
   SPARK_GRAFT_SF_DIR   input tables (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS     primary parallelism (default: the cores this
                        process may run on, as nproc reports)
-  BENCH_SCALING=0      skip the second-level scaling run
-  BENCH_SINGLE_CORES   (internal) run one measurement and exit
-  BENCH_CLEAN_TOL      clean-window probe tolerance (default 0.72)
-  BENCH_MC_ANCHOR      archived-context whole-box MB/s (20400; not gated on)
-  BENCH_MAX_ATTEMPTS   headline retries on a dirty window (default 3)
-  BENCH_SCALE_MAX_ROUNDS  scaling-round cap incl. clean-window
-                          extensions (default BENCH_SCALE_ROUNDS+3)
+  BENCH_SCALING=0      skip the two-level scaling run
+  BENCH_SCALE_ROUNDS   same-round (high, low) scaling pairs (default 3)
+  BENCH_SCALE_HIGH / BENCH_SCALE_LOW / BENCH_SCALE_REP
+                       scaling levels and input replication (see below)
+  BENCH_SKIP_SWEEP=1   skip the registry sweep of the detail file
+  BENCH_REGISTRY_SF    the sweep's input tables (default sf0.01)
+  BENCH_SINGLE_CORES   (internal) run one scaling level and exit
+
+Each figure is measured once per run; compare runs by repeating them
+(perfbench/run.py does the repeats and reports their spread).
 """
 
 from __future__ import annotations
@@ -55,25 +58,6 @@ SCALE_LOW = int(os.environ.get("BENCH_SCALE_LOW") or max(1, min(2, SCALE_HIGH //
 #: read-only by every level (identical bytes, fresh JVM per level).
 SCALE_REP = int(os.environ.get("BENCH_SCALE_REP", "16"))
 
-#: Clean-host-window gate (r3 lesson: the driver archives exactly ONE
-#: run, and r3's archived run caught a 4x-dirty window — 13.7 GB/s
-#: whole-box probe vs the ~20.4 GB/s measured clean — so the official
-#: artifact failed criteria the same-day sweeps met). The headline is
-#: now only emitted from a window whose bracketing whole-box probes
-#: reach CLEAN_TOL x the SESSION MEDIAN probe (a dip relative to what
-#: this same session sustains = transient steal); dirty windows are
-#: retried (bounded), and if every attempt is dirty the best one is
-#: archived with host_window.clean=false so the artifact says so
-#: itself instead of presenting weather as capability. A stable-but-
-#: slow box stays "clean": efficiency is a within-round ratio and the
-#: headline carries its calibration denominator for cross-round reads.
-CLEAN_TOL = float(os.environ.get("BENCH_CLEAN_TOL", "0.72"))
-#: whole-box sha256 aggregate measured on an idle window of this
-#: sandbox (BASELINE.md r2 protocol runs: 20.4 GB/s) — archived as
-#: cross-round context only, never used as the gate reference
-MC_ANCHOR = float(os.environ.get("BENCH_MC_ANCHOR", "20400.0"))
-MAX_ATTEMPTS = int(os.environ.get("BENCH_MAX_ATTEMPTS", "3"))
-
 
 def _cpu_calibration() -> float:
     """Single-thread CPU speed probe (MB of sha256 per second over a
@@ -92,40 +76,6 @@ def _cpu_calibration() -> float:
         hashlib.sha256(buf).digest()
         best = min(best, time.perf_counter() - t0)
     return round(32 / best, 1)
-
-
-def _mc_work(_):
-    import hashlib
-
-    buf = b"\xab" * (16 << 20)
-    t0 = time.perf_counter()
-    for _ in range(4):
-        hashlib.sha256(buf).digest()
-    return time.perf_counter() - t0
-
-
-#: host-cleanliness probes always span the WHOLE box (os.cpu_count()),
-#: independent of SPARK_GRAFT_CPUS — the 20.4 GB/s anchor was measured
-#: at full width, and host steal is a box-level phenomenon
-MC_PROBE_PROCS = os.cpu_count() or CPUS
-
-
-def _cpu_calibration_multicore(nproc: int = None) -> float:
-    """Whole-box probe: aggregate sha256 MB/s across ``nproc``
-    processes. The single-thread probe misses cross-core contention
-    (host steal only visible under full-width load — observed: the
-    32-core Python parse stage swinging 4x while the 1-thread probe
-    stayed flat), so the full-parallelism denominator is archived
-    alongside it."""
-    import multiprocessing as mp
-
-    if nproc is None:
-        nproc = MC_PROBE_PROCS
-    with mp.Pool(nproc) as p:
-        t0 = time.perf_counter()
-        p.map(_mc_work, range(nproc))
-        wall = time.perf_counter() - t0
-    return round(nproc * 64 / wall, 1)
 
 
 def _measure(cores: int) -> dict:
@@ -281,75 +231,6 @@ def _measure(cores: int) -> dict:
         spark.stop()
 
 
-def _measure_secondary(cores: int) -> tuple[dict, dict]:
-    """Second scoring window for the heavy SECONDARY headline queries
-    (same sf, fresh session): the clean-window gate brackets the
-    headline section as a whole, so a single transient hiccup inside
-    it can print a phantom 4x regression for one runs=1 query (r4:
-    dedup_groups 13.37 s in the compact line vs 2.86 s the same day).
-    The compact line takes each secondary query's best of the two
-    windows — pipeline_agg itself stays gated-window-only. Returns
-    (timings, errors): a failing query is RECORDED, not silently
-    dropped (r5 ADVICE item 4), so a broken query cannot quietly keep
-    its old headline number."""
-    from otel_worker_spark.fixtures import (
-        service_lookup_df,
-        token_sequences_from_events,
-    )
-    from otel_worker_spark.ops import dedup as dd
-    from otel_worker_spark.ops import similarity as sim
-    from otel_worker_spark.pipeline import PipelineStores, ingest_batch
-    from otel_worker_spark.queries import trace_summaries, traces_list
-    from otel_worker_spark.registry import rel_pricing_summary
-    from otel_worker_spark.session import get_spark
-
-    spark = get_spark(
-        app_name=f"bench-secondary-{cores}", cores=cores, shuffle_partitions=cores
-    )
-    out: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    tmp = tempfile.mkdtemp(prefix="ows-bench-secondary-")
-    try:
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        # untimed setup for the store-backed queries: traces_list and
-        # trace_summaries read the span store, and their headline
-        # numbers are runs=2 inside the gated window — one slow window
-        # once printed a phantom 10x for them (r6: 0.4 s warm vs 4.2 s
-        # archived), so they get a second scoring window like the other
-        # secondary queries
-        tokens = token_sequences_from_events(spark, SF_DIR).repartition(64)
-        stores = PipelineStores(spark, os.path.join(tmp, "stores"))
-        ingest_batch(spark, tokens, service_lookup_df(spark), stores, batch_id=0)
-        spans = stores.spans.read(partition="traces")
-        jobs = {
-            "traces_list": lambda: traces_list(spans).collect(),
-            "trace_summaries": lambda: trace_summaries(spans, limit=20).collect(),
-            "dedup_minhash_pairs": lambda: dd.minhash_lsh_pairs(
-                docs, hash_impl="xxhash64"
-            ).count(),
-            "dedup_minhash_pairs_128": lambda: dd.minhash_lsh_pairs(
-                docs, hash_impl="xxhash64",
-                n_perms=dd.PROD_PERMS, n_bands=dd.PROD_BANDS,
-            ).count(),
-            "dedup_groups": lambda: dd.dedup_groups(docs, hash_impl="xxhash64").count(),
-            "ann_cosine_topk": lambda: sim.cosine_topk(embs).count(),
-            "rel_pricing_summary": lambda: rel_pricing_summary(spark, SF_DIR).collect(),
-        }
-        for name, fn in jobs.items():
-            t0 = time.perf_counter()
-            try:
-                fn()
-                out[name] = round(time.perf_counter() - t0, 3)
-            except Exception as exc:  # headline value stands; failure archived
-                errors[name] = repr(exc)[:500]
-        dd.release_persisted_signatures()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        spark.stop()
-    return out, errors
-
-
 def _registry_sweep(spark) -> dict:
     """Per-query wall time for EVERY registry query (bench hygiene:
     regressions attributable query-by-query). Runs at the CORRECTNESS
@@ -395,8 +276,8 @@ def _registry_sweep(spark) -> dict:
 
 def _run_registry_sweep() -> dict:
     """Own-session sweep runner (detail-file content only): the sweep
-    runs AFTER the accepted headline window so a dirty first attempt
-    never pollutes it, and its session never overlaps a measurement."""
+    runs after the headline, and its session never overlaps a
+    measurement."""
     from otel_worker_spark.session import get_spark
 
     spark = get_spark(app_name="bench-sweep", cores=CPUS, shuffle_partitions=CPUS)
@@ -488,218 +369,24 @@ def _measure_scaling(cores: int) -> dict:
         spark.stop()
 
 
-def main() -> None:
-    single = os.environ.get("BENCH_SINGLE_CORES")
-    if single:
-        print("BENCH_SINGLE_RESULT " + json.dumps(_measure_scaling(int(single))))
-        return
-
-    calib_before = _cpu_calibration()
-
-    # ---- clean-window-gated headline (bounded retries) ---------------
-    # Gate reference = the SESSION MEDIAN of whole-box probes, not an
-    # absolute cross-day anchor: scaling efficiency is a within-round
-    # ratio and the headline carries its calibration denominator, so a
-    # stable-but-slow host window is a valid measurement — what the
-    # gate must catch is a probe that dips well below what the rest of
-    # this same session sustains (the r3 failure mode: 13.7 GB/s
-    # during the measured section vs ~20.4 the same day). An absolute
-    # anchor instead brands every run on a persistently-shared box
-    # dirty and the retry loop just burns the time budget. MC_ANCHOR
-    # is still archived as context for cross-round comparison.
-    session_probes: list[float] = []
-
-    def _reference() -> float:
-        s = sorted(session_probes)
-        n = len(s)
-        if n == 0:
-            return 0.0
-        return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
-
-    def _is_clean(lo_probe: float) -> bool:
-        return lo_probe >= CLEAN_TOL * _reference()
-
-    # pre-probe so the first attempt's gate has context beyond its own
-    # bracketing probes (bootstrap: one sample before any measurement)
-    session_probes.append(_cpu_calibration_multicore())
-
-    attempts: list[dict] = []
-    attempt_results: list[dict] = []
-    for att in range(MAX_ATTEMPTS):
-        mc_before = _cpu_calibration_multicore()
-        got = _measure(CPUS)
-        mc_after = _cpu_calibration_multicore()
-        session_probes += [mc_before, mc_after]
-        clean = _is_clean(min(mc_before, mc_after))
-        attempts.append(
-            {
-                "pipeline_agg": got["queries"]["pipeline_agg"],
-                "mc_before": mc_before,
-                "mc_after": mc_after,
-                "clean": clean,
-            }
-        )
-        attempt_results.append(got)
-        if clean:
-            break
-        time.sleep(15)  # give a transient steal window a chance to pass
-
-    def _select_primary() -> int:
-        """Archive the fastest CLEAN attempt when one exists; dirty
-        attempts only compete when every window was dirty (r4 advice:
-        a fast dirty attempt must not be archived under a clean=true
-        flag taken from a different attempt)."""
-        pool = [i for i, a in enumerate(attempts) if a["clean"]]
-        pool = pool or list(range(len(attempts)))
-        return min(pool, key=lambda i: attempts[i]["pipeline_agg"])
-
-    primary_i = _select_primary()
-    primary = attempt_results[primary_i]
-
-    host_window = {
-        # the verdict of the attempt actually archived, not attempts[-1]
-        "clean": attempts[primary_i]["clean"],
-        "archived_attempt": primary_i,
-        "tolerance": CLEAN_TOL,
-        "reference_mc_mb_per_sec": _reference(),
-        "anchor_mc_mb_per_sec": MC_ANCHOR,
-        "estimator": "session median of whole-box probes",
-        "attempts": attempts,
-    }
-
-    # The one printed line stays COMPACT (headline timings only): the
-    # r2 line embedded every per-run sample + the 60-query sweep and
-    # grew past the driver's tail capture (BENCH_r02.json parsed:null).
-    # The full detail — per-run times, registry sweep — goes to a side
-    # file next to this script instead.
-    result = {
-        "metric": "parse->route->aggregate throughput (sequences/sec)",
-        "value": primary["queries"]["pipeline_agg"],
-        "unit": "sec",
-        "sf": SF_DIR,
-        "queries": dict(primary["queries"]),
-        "n_seq": primary["n_seq"],
-        "cores": CPUS,
-        "throughput_seq_per_sec": primary["throughput_seq_per_sec"],
-        # single-thread sha256 MB/s before/after the measured section —
-        # the host-drift denominator (see BASELINE.md); a 4x gap between
-        # two rounds' raw numbers with matching calibration IS a real
-        # change, with 4x-different calibration it is host weather
-        "calibration_mb_per_sec": {"before": calib_before, "after": _cpu_calibration()},
-        # whole-box denominator (aggregate MB/s across CPUS procs) +
-        # the clean-window gate verdict for the measured section
-        "calibration_mc_mb_per_sec": session_probes[-1],
-        "host_window": host_window,
-    }
-    # sweep AFTER the accepted window, own session (detail-file only;
-    # BENCH_SKIP_SWEEP=1 skips it for fast scaling-only iterations)
-    skip_extra = os.environ.get("BENCH_SKIP_SWEEP") == "1"
-    # a skip-sweep run is a scaling-only iteration: carry the previous
-    # detail file's sweep/secondary blocks forward instead of
-    # clobbering them with empties (they describe the same code — the
-    # point of the skip is to NOT redo that work), and remember the
-    # previous headline so its scaling attempt can be archived rather
-    # than silently replaced.
-    # read the prior detail file on EVERY run (not just skip-sweep):
-    # the scaling-attempt history must survive full runs too, or a
-    # routine full bench would wipe the archive the skip runs built
-    prior_detail: dict = {}
+def _measure_scaling_rounds() -> dict | None:
+    """The scaling evidence: the identical pipeline_agg job at
+    SCALE_HIGH and SCALE_LOW, a fresh JVM per level. Each round runs
+    the high level then the low level BACK-TO-BACK and its efficiency
+    is a within-round ratio: this host drifts between runs, so pairing
+    a low-level run from one round with a high-level run from another
+    measures the weather, not the scaling — the two runs of one round
+    share the closest host conditions (the analog of benchmarking both
+    cluster sizes on the same hardware). Headline = best round, with
+    the median round and the peak-of-level throughputs next to it."""
+    rounds = int(os.environ.get("BENCH_SCALE_ROUNDS", "3"))
+    levels: dict[int, dict] = {}
+    round_pairs: list[dict] = []
+    scale_tmp = tempfile.mkdtemp(prefix="ows-scale-input-")
+    scale_input = os.path.join(scale_tmp, "tokens")
     try:
-        with open(
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-            )
-        ) as fh:
-            prior_detail = json.load(fh)
-    except Exception:
-        prior_detail = {}
-    detail = {
-        "query_runs": primary.get("query_runs", {}),
-        "registry": (
-            prior_detail.get("registry", {}) if skip_extra else _run_registry_sweep()
-        ),
-    }
-    if skip_extra:
-        detail["secondary_window"] = prior_detail.get("secondary_window", {})
-        if prior_detail.get("secondary_errors"):
-            detail["secondary_errors"] = prior_detail["secondary_errors"]
-        if prior_detail.get("secondary_probes"):
-            detail["secondary_probes"] = prior_detail["secondary_probes"]
-    else:
-        # same-sf second window for the heavy secondary queries —
-        # merged (min) into the compact line just before printing, but
-        # ONLY from a clean window: the merge is bracketed by the same
-        # whole-box probes as the primary so host_window.clean keeps
-        # describing the provenance of every merged value (r5 ADVICE
-        # item 4). The clean verdict is applied at merge time against
-        # the FINAL session median.
-        # bounded retry: a dirty secondary window previously just gave
-        # up (merge skipped, headline kept the possibly-noisy gated
-        # value — the r6 run archived trace_summaries 11.5 s from a
-        # window whose after-probe had dropped 40%). Re-run once after
-        # a cooldown when the provisional clean check fails; the merge
-        # below still re-judges the kept window against the FINAL
-        # session median.
-        sec_attempts = []
-        for sec_att in range(2):
-            sec_before = _cpu_calibration_multicore()
-            sec_queries, sec_errors = _measure_secondary(CPUS)
-            sec_after = _cpu_calibration_multicore()
-            session_probes += [sec_before, sec_after]
-            sec_attempts.append(
-                {
-                    "queries": sec_queries,
-                    "errors": sec_errors,
-                    "before": sec_before,
-                    "after": sec_after,
-                }
-            )
-            if _is_clean(min(sec_before, sec_after)):
-                break
-            time.sleep(15)
-        # keep the attempt with the best (highest) bracketing floor —
-        # the one measured under the least-contended host conditions
-        kept = max(sec_attempts, key=lambda a: min(a["before"], a["after"]))
-        detail["secondary_window"] = kept["queries"]
-        detail["secondary_errors"] = kept["errors"]
-        detail["secondary_probes"] = {
-            "before": kept["before"],
-            "after": kept["after"],
-            "attempts": len(sec_attempts),
-        }
-
-    if os.environ.get("BENCH_SCALING", "1") != "0":
-        # Fresh JVM per level (identical heap/GC state); each round runs
-        # the high level then the low level BACK-TO-BACK, and efficiency
-        # is computed per round, headline = best round. Rationale: this
-        # sandbox shows up to 4x whole-process host drift, so pairing a
-        # lucky-fast low-level run from one round with a high-level run
-        # from another measures the weather, not the scaling; the two
-        # runs of one round share the closest host conditions — the
-        # analog of benchmarking both cluster sizes on the same hardware.
-        # Peak-of-level throughputs are still reported for transparency.
-        rounds = int(os.environ.get("BENCH_SCALE_ROUNDS", "3"))
-        # clean-window extension: keep adding rounds (bounded) until at
-        # least one CLEAN round meets the >=0.8 criterion — the r3
-        # artifact archived three dirty-window pairs and failed a bar
-        # the same-day clean windows met
-        max_rounds = int(os.environ.get("BENCH_SCALE_MAX_ROUNDS", str(rounds + 3)))
-        levels: dict[int, dict] = {}
-        round_pairs: list[dict] = []
-        scale_tmp = tempfile.mkdtemp(prefix="ows-scale-input-")
-        scale_input = os.path.join(scale_tmp, "tokens")
         _generate_scale_input(scale_input)  # once, at full parallelism
-        r = 0
-        while r < rounds or (
-            r < max_rounds
-            and not any(
-                p["clean"] and p["efficiency"] >= 0.8 for p in round_pairs
-            )
-        ):
-            r += 1
-            round_probe = _cpu_calibration_multicore()
-            session_probes.append(round_probe)
-            round_clean = _is_clean(round_probe)
+        for _ in range(rounds):
             this_round: dict[int, dict] = {}
             for cores in (SCALE_HIGH, SCALE_LOW):
                 env = dict(
@@ -712,18 +399,13 @@ def main() -> None:
                 # grants are exactly 4x apart, so "N vs 4N" is an
                 # OS-enforced fact, not a scheduler suggestion. Without
                 # pinning, the 2-core level freely bursts across the
-                # whole 32-core box (measured 17-30k seq/s, 1.7x swing
-                # run to run) and the efficiency ratio measures burst
+                # whole box and the efficiency ratio measures burst
                 # asymmetry, not scaling.
                 cmd = [sys.executable, os.path.abspath(__file__)]
                 if shutil.which("taskset"):
                     cmd = ["taskset", "-c", f"0-{3 * cores - 1}"] + cmd
                 proc = subprocess.run(
-                    cmd,
-                    env=env,
-                    capture_output=True,
-                    text=True,
-                    timeout=3600,
+                    cmd, env=env, capture_output=True, text=True, timeout=3600
                 )
                 for line in proc.stdout.splitlines():
                     if line.startswith("BENCH_SINGLE_RESULT "):
@@ -739,138 +421,79 @@ def main() -> None:
                     {
                         "throughput_low": lo["seq_per_sec"],
                         "throughput_high": hi["seq_per_sec"],
-                        "efficiency": round(
-                            (hi["seq_per_sec"] / lo["seq_per_sec"])
-                            / (SCALE_HIGH / SCALE_LOW),
-                            3,
-                        ),
-                        "mc_probe": round_probe,
-                        "clean": round_clean,
+                        "efficiency": _efficiency(lo, hi),
                     }
                 )
+    finally:
         shutil.rmtree(scale_tmp, ignore_errors=True)
-        # re-judge every window against the FINAL session median — the
-        # early attempts were gated with only the probes seen so far
-        for p in round_pairs:
-            p["clean"] = _is_clean(p["mc_probe"])
-        for a in attempts:
-            a["clean"] = _is_clean(min(a["mc_before"], a["mc_after"]))
-        # the re-judge can flip attempt verdicts — re-select the
-        # archived attempt under the final flags and refresh every
-        # result field derived from it
-        primary_i = _select_primary()
-        primary = attempt_results[primary_i]
-        host_window["clean"] = attempts[primary_i]["clean"]
-        host_window["archived_attempt"] = primary_i
-        result["value"] = primary["queries"]["pipeline_agg"]
-        result["queries"] = dict(primary["queries"])
-        result["n_seq"] = primary["n_seq"]
-        result["throughput_seq_per_sec"] = primary["throughput_seq_per_sec"]
-        detail["query_runs"] = primary.get("query_runs", {})
-        host_window["reference_mc_mb_per_sec"] = _reference()
-        if round_pairs:
-            clean_pairs = [p for p in round_pairs if p["clean"]]
-            # headline = best pair from CLEAN-window rounds when any
-            # exist (a dirty low-level run can fake 1.2 as easily as
-            # 0.46); dirty-only sessions fall back to best-overall and
-            # say so via clean_rounds=0
-            pool = clean_pairs or round_pairs
-            best = max(pool, key=lambda p: p["efficiency"])
-            effs = sorted(p["efficiency"] for p in round_pairs)
-            n = len(effs)
-            # median same-round pair: the robustness headline next to
-            # the best pair (best-of-N on a drifting box flatters;
-            # the ≥0.8 criterion should hold on the median too)
-            median_eff = round(
-                effs[n // 2] if n % 2 else (effs[n // 2 - 1] + effs[n // 2]) / 2, 3
-            )
-            lo, hi = levels[SCALE_LOW], levels[SCALE_HIGH]
-            result["scaling"] = {
-                "low_cores": SCALE_LOW,
-                "high_cores": SCALE_HIGH,
-                "n_seq": hi["n_seq"],
-                "throughput_low": best["throughput_low"],
-                "throughput_high": best["throughput_high"],
-                "efficiency": best["efficiency"],
-                "efficiency_median": median_eff,
-                "clean_rounds": len(clean_pairs),
-                "estimator": "best same-round (high, low) pair from "
-                             f"clean-window rounds ({len(clean_pairs)} of "
-                             f"{len(round_pairs)}); median over all pairs",
-                "round_pairs": round_pairs,
-                "peak_of_level": {
-                    "throughput_low": lo["seq_per_sec"],
-                    "throughput_high": hi["seq_per_sec"],
-                    "efficiency": round(
-                        (hi["seq_per_sec"] / lo["seq_per_sec"])
-                        / (SCALE_HIGH / SCALE_LOW),
-                        3,
-                    ),
-                },
-            }
-
-    # secondary de-noise merge: each non-gated query reports its best
-    # across (gated headline window, dedicated second window) — done
-    # LAST because the scaling re-judge can reassign result["queries"],
-    # and only from a CLEAN secondary window (judged against the final
-    # session median, like the attempt re-judge above)
-    merged = []
-    # carried-forward blocks (skip-sweep runs) were measured in a
-    # DIFFERENT session: archive them in the detail file but never
-    # min-merge them into this run's headline queries
-    sec_probes = None if skip_extra else detail.get("secondary_probes")
-    sec_clean = bool(sec_probes) and _is_clean(
-        min(sec_probes["before"], sec_probes["after"])
+    if not round_pairs:
+        return None
+    best = max(round_pairs, key=lambda p: p["efficiency"])
+    effs = sorted(p["efficiency"] for p in round_pairs)
+    n = len(effs)
+    median_eff = round(
+        effs[n // 2] if n % 2 else (effs[n // 2 - 1] + effs[n // 2]) / 2, 3
     )
-    if sec_probes:
-        detail["secondary_probes"]["clean"] = sec_clean
-    if sec_clean:
-        for name, sec in detail.get("secondary_window", {}).items():
-            if name in result["queries"] and sec < result["queries"][name]:
-                result["queries"][name] = sec
-                merged.append(name)
-    if merged:
-        result["secondary_rescored"] = sorted(merged)
-    # carried-forward secondary_errors describe a DIFFERENT session's
-    # window — keep them in the detail archive only, never in this
-    # run's headline (a since-fixed query must not keep reporting)
-    if detail.get("secondary_errors") and not skip_extra:
-        result["secondary_errors"] = sorted(detail["secondary_errors"])
+    lo, hi = levels[SCALE_LOW], levels[SCALE_HIGH]
+    return {
+        "low_cores": SCALE_LOW,
+        "high_cores": SCALE_HIGH,
+        "n_seq": hi["n_seq"],
+        "throughput_low": best["throughput_low"],
+        "throughput_high": best["throughput_high"],
+        "efficiency": best["efficiency"],
+        "efficiency_median": median_eff,
+        "estimator": f"best same-round (high, low) pair of {n}; median over all pairs",
+        "round_pairs": round_pairs,
+        "peak_of_level": {
+            "throughput_low": lo["seq_per_sec"],
+            "throughput_high": hi["seq_per_sec"],
+            "efficiency": _efficiency(lo, hi),
+        },
+    }
 
-    # every run replaces the headline; keep every prior scaling
-    # attempt visible regardless of run flavor (no silent
-    # cherry-picking — all pairs of all sessions stay in the archive,
-    # per the drift protocol). Chain the prior headline's history even
-    # when that headline itself ran with BENCH_SCALING=0, append its
-    # own scaling block if it has one, and bound the chain so the
-    # file doesn't grow without limit across rounds.
-    prior_headline = prior_detail.get("headline", {})
-    if skip_extra and prior_headline:
-        detail["headline_prior"] = {
-            k: v for k, v in prior_headline.items() if k != "scaling_history"
-        }
-    # summary-only entries (no round_pairs): the compact stdout line
-    # must stay parseable by the driver's tail capture — full pairs
-    # live in each session's own archived headline / headline_prior
-    history = [
-        {k: h.get(k) for k in h if k != "round_pairs"}
-        for h in prior_headline.get("scaling_history", [])
-    ]
-    if prior_headline.get("scaling"):
-        history.append(
-            {
-                k: prior_headline["scaling"].get(k)
-                for k in (
-                    "throughput_low",
-                    "throughput_high",
-                    "efficiency",
-                    "efficiency_median",
-                    "clean_rounds",
-                )
-            }
-        )
-    if history:
-        result["scaling_history"] = history[-10:]
+
+def _efficiency(lo: dict, hi: dict) -> float:
+    return round((hi["seq_per_sec"] / lo["seq_per_sec"]) / (SCALE_HIGH / SCALE_LOW), 3)
+
+
+def main() -> None:
+    single = os.environ.get("BENCH_SINGLE_CORES")
+    if single:
+        print("BENCH_SINGLE_RESULT " + json.dumps(_measure_scaling(int(single))))
+        return
+
+    calib_before = _cpu_calibration()
+    primary = _measure(CPUS)
+    # The one printed line stays COMPACT (headline timings only): the
+    # r2 line embedded every per-run sample + the 60-query sweep and
+    # grew too long for a tail capture of stdout to parse
+    # (BENCH_r02.json parsed:null). The full detail — per-run times,
+    # registry sweep — goes to a side file next to this script instead.
+    result = {
+        "metric": "parse->route->aggregate throughput (sequences/sec)",
+        "value": primary["queries"]["pipeline_agg"],
+        "unit": "sec",
+        "sf": SF_DIR,
+        "queries": primary["queries"],
+        "n_seq": primary["n_seq"],
+        "cores": CPUS,
+        "throughput_seq_per_sec": primary["throughput_seq_per_sec"],
+        # single-thread sha256 MB/s before/after the measured section —
+        # the host-drift denominator (see BASELINE.md); a 4x gap between
+        # two runs' raw numbers with matching calibration IS a real
+        # change, with 4x-different calibration it is host weather
+        "calibration_mb_per_sec": {"before": calib_before, "after": _cpu_calibration()},
+    }
+    # sweep after the headline, own session (detail file only)
+    detail = {
+        "query_runs": primary["query_runs"],
+        "registry": {} if os.environ.get("BENCH_SKIP_SWEEP") == "1" else _run_registry_sweep(),
+    }
+    if os.environ.get("BENCH_SCALING", "1") != "0":
+        scaling = _measure_scaling_rounds()
+        if scaling is not None:
+            result["scaling"] = scaling
 
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"

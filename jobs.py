@@ -286,7 +286,7 @@ def cmd_optimize(args) -> None:
     spark = get_spark("optimize")
     stores = _stores(spark, args.stores)
     out = {}
-    for name in ("spans", "quarantine", "receipts", "manifest"):
+    for name in ("spans", "quarantine"):
         st = getattr(stores, name)
         compacted = st.compact_small_files(target_rows=args.target_rows)
         vacuumed = st.vacuum() if not args.no_vacuum else {"files": 0, "bytes": 0}
@@ -466,7 +466,7 @@ def cmd_truncate(args) -> None:
     database.rs:29-42) — truncate every table of a deployment."""
     spark = get_spark("truncate")
     stores = _stores(spark, args.stores)
-    for name in ("spans", "quarantine", "receipts", "manifest"):
+    for name in ("spans", "quarantine"):
         getattr(stores, name).truncate()
     print(json.dumps({"truncated": True}))
 

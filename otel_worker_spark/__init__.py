@@ -12,8 +12,10 @@ collector, see /root/reference), re-expressed Spark-first:
            the pure-Catalyst twin (``from_json`` + explode chain) and
            ``proto`` the OTLP-protobuf kernel
 - enrich:  broadcast hash-join against service lookup dims
-- route:   per-signal fan-out (traces / logs / metrics) with per-sink
-           count + sum receipts (otel-worker-core/src/service.rs:32-54)
+- route:   per-signal sinks (traces / logs / metrics) as the partitions
+           of one write, one commit per batch; the per-sink count + sum
+           receipts are observed on that write and read back as a view
+           of the commit log (otel-worker-core/src/service.rs:32-54)
 - store:   parquet + atomic commit-log table layer (stands in for
            Iceberg, whose jars are not in this image; the interface —
            atomic snapshot append, idempotent-by-batch, delete,

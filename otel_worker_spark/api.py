@@ -204,8 +204,8 @@ class TraceApi:
 
             try:
                 env = decode_export_request(body)
-            except ValueError:
-                return 500, b"", "application/x-protobuf"
+            except ValueError:  # malformed wire bytes: the client's fault
+                return 400, b"", "application/x-protobuf"
             payloads = [json.dumps(env, separators=(",", ":"))]
             ok_body, ok_ct = b"", "application/x-protobuf"
         else:
@@ -227,8 +227,9 @@ class TraceApi:
     def notify_span_added(self, batch_id: str) -> None:
         """Post-commit SpanAdded broadcast (service.rs:47-49 → the ws
         hub): the batch's (trace_id, span_id) pairs from the manifest
-        store, fanned to every `/api/ws` subscriber. No-op without a
-        hub or subscribers; never fails the ingest."""
+        view of the spans commit log, fanned to every `/api/ws`
+        subscriber. No-op without a hub or subscribers; never fails the
+        ingest."""
         if self.ws_hub is None or self.ws_hub.connection_count() == 0:
             return
         from .ws import span_added_message

@@ -14,9 +14,10 @@ metrics". Two layers provide it:
   files already covered by a committed offset, and repairs batches
   that crashed between the data commit and the offset commit.
 
-The log uses the same create-exclusive ``os.link`` publish as the
-TableStore commit log (store.py): a crash never leaves a partial or
-overwritten entry, and concurrent writers retry onto the next seq.
+The log is published with the TableStore commit log's own
+create-exclusive ``os.link`` helper (``store.commit_json``): a crash
+never leaves a partial or overwritten entry, and concurrent writers
+retry onto the next seq.
 Everything is queryable as DataFrames (``offsets_df``/``metrics_df``)
 so lineage is first-class data, not log spelunking.
 
@@ -31,34 +32,12 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from .pipeline import PipelineStores, ingest_batch
-
-
-def commit_json(log_dir: str, entry: dict) -> int:
-    """Create-exclusive seq-numbered JSON commit (shared shape with
-    TableStore._commit): durable tmp write, then ``os.link`` publish —
-    FileExistsError means another writer claimed the seq, retry next.
-    Returns the seq claimed."""
-    entry["committed_at"] = time.time()
-    tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}")
-    while True:
-        names = [n for n in os.listdir(log_dir) if n.endswith(".json")]
-        seq = max((int(n.split(".")[0]) for n in names), default=-1) + 1
-        entry["seq"] = seq
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-        path = os.path.join(log_dir, f"{seq:012d}.json")
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            continue
-        os.unlink(tmp)
-        return seq
+from .store import commit_json
 
 
 class OffsetLog:
@@ -283,13 +262,12 @@ def ingest_directory(
       batch; the deterministic id makes the rerun idempotent;
     - crash between the spans commit and the offset record → the
       pending intent replays the EXACT original (batch_id, file set),
-      the store short-circuits (``skipped=True``, downstream stores
-      repaired by ingest_batch), and the offset is recorded as
-      ``replayed``. The intent is what makes this safe when NEW files
-      landed in the source dir during the crash window: regrouping the
-      directory listing would shift chunk boundaries and hand the
-      crashed files a fresh batch_id the store has never seen —
-      double-ingesting them;
+      the store short-circuits (``skipped=True``), and the offset is
+      recorded as ``replayed``. The intent is what makes this safe
+      when NEW files landed in the source dir during the crash window:
+      regrouping the directory listing would shift chunk boundaries
+      and hand the crashed files a fresh batch_id the store has never
+      seen — double-ingesting them;
     - completed batches are skipped entirely via ``committed_files``
       without touching Spark.
 

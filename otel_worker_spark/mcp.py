@@ -24,11 +24,11 @@ Protocol surface, mirrored handler by handler:
 
 Notifications out: the reference broadcasts
 ``notifications/resources/list_changed`` whenever a SpanAdded event
-lands (mcp.rs:88-96). Here the SpanAdded manifest TABLE is the event
-stream (streaming.py's design), so ``poll_notifications`` tails it by
-batch_id cursor and emits one list_changed per new batch — the pull
-shape of the same contract, wired into the stdio loop between
-requests.
+lands (mcp.rs:88-96). Here the spans commit log is the event stream
+(streaming.py's design): ``poll_notifications`` tails its batches
+through the manifest view by batch_id cursor and emits one
+list_changed per new batch — the pull shape of the same contract,
+wired into the stdio loop between requests.
 
 Transport: newline-delimited JSON-RPC over any file pair
 (``serve_stdio``) — the reference's default stdio transport

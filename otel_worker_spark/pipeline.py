@@ -1,56 +1,111 @@
 """The end-to-end ingest pipeline: parse → enrich → route → sinks.
 
 One micro-batch = one ``ingest_batch`` call (the reference's
-``Service::ingest_export``, service.rs:32-54, set-oriented). The
-batch is processed in three commits:
+``Service::ingest_export``, service.rs:32-54, set-oriented): one
+partitioned write of the routed frame lands every signal sink and the
+quarantine rows in a single pass (parse runs once, nothing is
+persisted), and one commit publishes it. The per-sink receipts are
+observed on that write and kept in the commit entry; the receipts and
+the SpanAdded manifest are read-only views over the spans commit log.
 
-1. one partitioned write of the routed frame that lands every signal
-   sink and the quarantine rows in a single pass (parse runs once, as
-   part of this write; nothing is persisted);
-2. the just-written batch files are read back, and from them the
-   per-sink receipts and the SpanAdded manifest are appended to their
-   own tables — two more commits, launched together from a 2-thread
-   pool.
-
-All appends are idempotent by batch_id (see store.TableStore), so a
+Appends are idempotent by batch_id (see store.TableStore), so a
 restarted stream replays safely — the real version of the atomicity
-the reference only fakes (M3, data.rs:43-48). A replay of a batch
-whose spans committed but whose receipts or manifest did not (a crash
-between the commits) repairs those two tables from the written files.
+the reference only fakes (M3, data.rs:43-48). A crash before the
+commit leaves nothing visible, and the rerun ingests the batch once.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+import functools
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .enrich import enrich_spans
 from .parse import parse_token_sequences
-from .route import signal_expr, sink_receipts, span_added_manifest
+from .route import SIGNALS, signal_expr
 from .store import TableStore
 
 
-def _append_receipts_and_manifest(
-    stores: PipelineStores, live: DataFrame, batch_id: str | int
-) -> None:
-    """Land the two downstream tables of a committed spans batch.
+def sink_aggregates() -> dict[str, Column]:
+    """Per-sink count + sum(n_tok) of a routed frame (A3/A4), named
+    ``<sink>.row_count`` / ``<sink>.sum_n_tok``; quarantine rows count
+    in no sink."""
+    out = {}
+    for sink in SIGNALS:
+        hit = F.col("signal") == sink
+        out[f"{sink}.row_count"] = F.count(F.when(hit, 1))
+        out[f"{sink}.sum_n_tok"] = F.sum(F.when(hit, F.col("n_tok")))
+    return out
 
-    The appends are independent (different tables, both derived from
-    the already-written batch files), so they run from a 2-thread pool
-    (guide §2.6): Spark schedules both jobs at once and the second
-    append's tasks back-fill the first's tail instead of waiting for
-    it — measured ~0.82 s sequential → ~0.5 s overlapped at sf0.1.
-    Each append stays idempotent by batch_id, so crash/replay
-    semantics are unchanged regardless of which lands first.
-    """
-    receipts = sink_receipts(live, batch_id)
-    manifest = span_added_manifest(live, batch_id)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fr = pool.submit(stores.receipts.append, receipts, batch_id)
-        fm = pool.submit(stores.manifest.append, manifest, batch_id)
-        fr.result()
-        fm.result()
+
+class SpansLogView:
+    """A read-only table over the spans commit log: ``frame`` builds its
+    rows from spans append entries. It owns no files and no log;
+    batches committed at or before the latest truncate are not listed."""
+
+    def __init__(
+        self, spans: TableStore, frame: Callable[[TableStore, list[dict]], DataFrame]
+    ):
+        self.spans = spans
+        self._frame = frame
+
+    def _appends(self) -> list[dict]:
+        live: list[dict] = []
+        for e in self.spans._entries():
+            if e["op"] == "truncate":
+                live = []
+            elif e["op"] == "append":
+                live.append(e)
+        return live
+
+    def committed_batches(self) -> dict[str, dict]:
+        return {e["batch_id"]: e for e in self._appends()}
+
+    def lineage(self) -> list[dict]:
+        """The listed spans appends, with no files of their own."""
+        listed = {e["seq"] for e in self._appends()}
+        return [{**rec, "files": []} for rec in self.spans.lineage() if rec["seq"] in listed]
+
+    def read(self) -> DataFrame:
+        return self._frame(self.spans, self._appends())
+
+    def read_batch(self, batch_id: str | int) -> DataFrame | None:
+        e = self.committed_batches().get(str(batch_id))
+        return None if e is None else self._frame(self.spans, [e])
+
+
+def _receipts_frame(spans: TableStore, entries: list[dict]) -> DataFrame:
+    """One row per (batch, sink that got rows), from the aggregates
+    observed on each spans write — the engine's version of the
+    reference's rows_written counts (otel-worker/src/data.rs:176-224)."""
+    rows = []
+    for e in entries:
+        obs = e.get("observed") or {}
+        rows += [
+            (e["batch_id"], sink, obs[f"{sink}.row_count"], obs[f"{sink}.sum_n_tok"])
+            for sink in SIGNALS
+            if obs.get(f"{sink}.row_count")
+        ]
+    return spans.spark.createDataFrame(
+        rows, "batch_id string, sink string, row_count bigint, sum_n_tok bigint"
+    )
+
+
+def _manifest_frame(spans: TableStore, entries: list[dict]) -> DataFrame:
+    """The SpanAdded event stream (api/models.rs:119-138): the routed
+    (trace_id, span_id) pairs of each batch, read from its own files."""
+    frames = []
+    for e in entries:
+        df = spans.read_batch(e["batch_id"])
+        if df is not None:  # a batch without rows wrote no files
+            frames.append(
+                df.filter(F.col("signal") != "quarantine")
+                .select(F.lit(e["batch_id"]).alias("batch_id"), "trace_id", "span_id")
+            )
+    if not frames:
+        return spans.spark.createDataFrame([], "batch_id string, trace_id string, span_id string")
+    return functools.reduce(DataFrame.unionByName, frames)
 
 
 class PipelineStores:
@@ -59,8 +114,8 @@ class PipelineStores:
     def __init__(self, spark: SparkSession, root: str):
         self.spans = TableStore(spark, f"{root}/spans")          # routed, partitioned by signal
         self.quarantine = TableStore(spark, f"{root}/quarantine")
-        self.receipts = TableStore(spark, f"{root}/sink_receipts")
-        self.manifest = TableStore(spark, f"{root}/span_added_manifest")
+        self.receipts = SpansLogView(self.spans, _receipts_frame)
+        self.manifest = SpansLogView(self.spans, _manifest_frame)
 
     def sink(self, signal: str) -> DataFrame:
         """Per-signal sink view (file-level pruned)."""
@@ -141,38 +196,17 @@ def ingest_batch(
     stores: PipelineStores,
     batch_id: str | int,
 ) -> dict:
-    """Process one micro-batch end-to-end. Returns the batch receipt
-    (per-sink counts — the ExportTraceServiceResponse analog)."""
+    """Process one micro-batch end-to-end: one write, one commit.
+    Returns the batch receipt (per-sink counts in ``observed`` — the
+    ExportTraceServiceResponse analog); a replay of a committed batch
+    returns the original receipt with ``skipped`` set."""
     committed = stores.spans.committed_batches()
-    if str(batch_id) in committed:
-        # Replay after restart: exactly-once, return the original
-        # receipt — but first REPAIR the two downstream stores. If the
-        # process died after the spans commit and before the receipts/
-        # manifest commits, those rows would otherwise be lost forever
-        # behind this early return. Each append is idempotent by
-        # batch_id, so the repair is a no-op when they already landed,
-        # and the check below avoids even launching the jobs then.
-        bid = str(batch_id)
-        if (
-            bid not in stores.receipts.committed_batches()
-            or bid not in stores.manifest.committed_batches()
-        ):
-            routed = stores.spans.read_batch(bid)
-            if routed is not None:
-                live = routed.filter(F.col("signal") != "quarantine")
-                _append_receipts_and_manifest(stores, live, batch_id)
+    bid = str(batch_id)
+    if bid in committed:
         return {**committed[bid], "skipped": True}
-
-    routed = transform_batch(token_df, service_lookup)
-    receipt = stores.spans.append(routed, batch_id, partition_by="signal")
-    # receipts/manifest read the JUST-WRITTEN batch files instead of a
-    # persisted copy of the wide routed frame (r7: the persist
-    # serialized every attribute map/event array into block storage
-    # purely to feed two narrow aggregates — the parquet read-back
-    # column-prunes to (n_tok) and (trace_id, span_id) and is the
-    # exact path the crash-repair replay below already takes, so the
-    # emitted rows are identical by construction).
-    written = stores.spans.read_batch(str(batch_id))
-    live = written.filter(F.col("signal") != "quarantine")
-    _append_receipts_and_manifest(stores, live, batch_id)
-    return {**receipt, "skipped": False}
+    return stores.spans.append(
+        transform_batch(token_df, service_lookup),
+        bid,
+        partition_by="signal",
+        observe=sink_aggregates(),
+    )

@@ -1,20 +1,19 @@
-"""Routing: per-signal fan-out + per-sink receipts (S7, A3/A4).
+"""Routing: the per-signal sink of each parsed row (S7).
 
 The reference has a single sink (the spans table) plus a post-commit
 ``SpanAdded`` broadcast (service.rs:47-49). The north rule extends
-this to per-signal sinks (traces / logs / metrics) with per-sink
-count and sum aggregates matching the handler's all-or-nothing batch
-receipt (``partial_success: None``, service.rs:51-53).
+this to per-signal sinks (traces / logs / metrics); the pipeline lands
+them as the partitions of one write (``signal`` is the partition
+column) and observes the per-sink count and sum receipt on it
+(pipeline.sink_aggregates).
 
 The routing rule is a plain Catalyst CASE over parsed columns —
-evaluated once; the fan-out filters are pushed to the parquet scan of
-each sink write, and with one shared input the writes reuse the same
-upstream stage.
+evaluated once, inside the write's single pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 SIGNALS = ("traces", "logs", "metrics")
@@ -36,38 +35,4 @@ def signal_expr(severity: Column | None = None, name: Column | None = None) -> C
         F.when(severity.isin(*LOG_SEVERITIES), F.lit("logs"))
         .when(name.rlike("(^metric|/purchase$)"), F.lit("metrics"))
         .otherwise(F.lit("traces"))
-    )
-
-
-def route(parsed: DataFrame) -> DataFrame:
-    return parsed.withColumn("signal", signal_expr())
-
-
-def fan_out(routed: DataFrame) -> dict[str, DataFrame]:
-    """signal → sub-frame. Lazy filters over one shared plan."""
-    return {s: routed.filter(F.col("signal") == s) for s in SIGNALS}
-
-
-def sink_receipts(routed: DataFrame, batch_id: str | int) -> DataFrame:
-    """Per-sink count + sum(n_tok) receipt rows (A3/A4) — the
-    engine's version of the reference's rows_written / rows_affected
-    counts (otel-worker/src/data.rs:176-224) and the all-or-nothing
-    export receipt.
-
-    One aggregate over the routed frame (map-side partials handle the
-    hot sink); emitted per micro-batch.
-    """
-    return (
-        routed.groupBy(F.col("signal").alias("sink"))
-        .agg(F.count(F.lit(1)).alias("row_count"), F.sum("n_tok").alias("sum_n_tok"))
-        .withColumn("batch_id", F.lit(str(batch_id)))
-        .select("batch_id", "sink", "row_count", "sum_n_tok")
-    )
-
-
-def span_added_manifest(routed: DataFrame, batch_id: str | int) -> DataFrame:
-    """The SpanAdded event stream (api/models.rs:119-138): all
-    (trace_id, span_id) pairs of a committed batch."""
-    return routed.select(
-        F.lit(str(batch_id)).alias("batch_id"), "trace_id", "span_id"
     )

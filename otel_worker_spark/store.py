@@ -32,15 +32,49 @@ one-file change. Iceberg jars are not available in this image.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 import uuid
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _latest_seq(log_dir: str) -> int:
+    return max(
+        (int(n.split(".")[0]) for n in os.listdir(log_dir) if n.endswith(".json")),
+        default=-1,
+    )
+
+
+def commit_json(log_dir: str, entry: dict) -> int:
+    """Publish ``entry`` as the next ``<seq>.json`` of ``log_dir`` and
+    return the seq claimed. Create-exclusive with seq retry:
+    ``os.link`` (unlike ``os.rename``, which silently overwrites) fails
+    with FileExistsError when another writer claimed the same seq, so
+    a losing writer re-scans and takes the next slot — no commit is
+    ever lost under concurrent appends (the optimistic-concurrency loop
+    Iceberg runs against its catalog). Readers only ever see
+    fully-written entries: the content is durable in the tmp file
+    before the link makes it visible."""
+    entry["committed_at"] = time.time()
+    tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}")
+    while True:
+        seq = _latest_seq(log_dir) + 1
+        entry["seq"] = seq
+        with open(tmp, "w") as f:
+            json.dump(entry, f)
+        path = os.path.join(log_dir, f"{seq:012d}.json")
+        try:
+            os.link(tmp, path)
+        except FileExistsError:
+            continue  # lost the race for this seq — take the next
+        os.unlink(tmp)
+        return seq
 
 
 class TableStore:
@@ -66,34 +100,10 @@ class TableStore:
         """Seq of the newest commit (-1 for an empty log), from one
         directory listing — no entry is parsed. Every commit moves it,
         so it keys caches of the table's current snapshot."""
-        return max(
-            (int(n.split(".")[0]) for n in os.listdir(self.log_dir) if n.endswith(".json")),
-            default=-1,
-        )
+        return _latest_seq(self.log_dir)
 
     def _commit(self, entry: dict) -> None:
-        """Create-exclusive publish with seq retry: ``os.link`` (unlike
-        ``os.rename``, which silently overwrites) fails with
-        FileExistsError when another writer claimed the same seq, so a
-        losing writer re-scans and takes the next slot — no commit is
-        ever lost under concurrent appends (the optimistic-concurrency
-        loop Iceberg runs against its catalog). Readers only ever see
-        fully-written entries: the content is durable in the tmp file
-        before the link makes it visible."""
-        entry["committed_at"] = time.time()
-        tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}")
-        while True:
-            seq = self.latest_seq() + 1
-            entry["seq"] = seq
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-            path = os.path.join(self.log_dir, f"{seq:012d}.json")
-            try:
-                os.link(tmp, path)
-            except FileExistsError:
-                continue  # lost the race for this seq — take the next
-            os.unlink(tmp)
-            return
+        commit_json(self.log_dir, entry)
 
     def committed_batches(self) -> dict[str, dict]:
         return {e["batch_id"]: e for e in self._entries() if e.get("batch_id") is not None}
@@ -170,8 +180,7 @@ class TableStore:
         re-attaches the partition column — typed ``string`` via the
         user schema, exactly like the union path's ``lit`` — and the
         plan is one scan instead of N unioned relations (r7: the ANN
-        serve codes read measured 0.37 s → 0.11 s, and the ingest
-        receipts/manifest read-back shares the win). Returns None when
+        serve codes read measured 0.37 s → 0.11 s). Returns None when
         the layout doesn't hold (multi-batch selections, unpartitioned
         groups, exotic values) — callers fall back to the union path,
         which handles everything."""
@@ -232,19 +241,33 @@ class TableStore:
         return files, lineage
 
     def append(
-        self, df: DataFrame, batch_id: str | int, partition_by: str | None = None
+        self,
+        df: DataFrame,
+        batch_id: str | int,
+        partition_by: str | None = None,
+        observe: dict[str, Column] | None = None,
     ) -> dict:
         """Atomic, idempotent-by-batch append. Returns the receipt.
 
         ``partition_by`` writes hive-style subdirectories in ONE job —
         the single-pass per-signal fan-out (each sink = a partition of
         the same write, so parse/enrich never run more than once).
+
+        ``observe`` names aggregate columns computed on the rows as the
+        write job passes them (a Spark ``Observation``, no extra job);
+        their values land in the commit entry as ``observed``.
         """
         batch_id = str(batch_id)
         existing = self.committed_batches().get(batch_id)
         if existing is not None:
             return {**existing, "skipped": True}
         self._save_schema(df.drop(partition_by) if partition_by else df)
+        obs = None
+        if observe:
+            # unnamed: a random-UUID name, so concurrent appends on one
+            # session never collect each other's metrics
+            obs = Observation()
+            df = df.observe(obs, *[c.alias(k) for k, c in observe.items()])
         files, lineage = self._write_files(df, f"b-{batch_id}", partition_by)
         entry = {
             "op": "append",
@@ -255,6 +278,8 @@ class TableStore:
             "row_count": sum(x["rows"] for x in lineage),
             "lineage": lineage,
         }
+        if obs is not None:
+            entry["observed"] = obs.get
         self._commit(entry)
         return {**entry, "skipped": False}
 
@@ -296,13 +321,30 @@ class TableStore:
             if pcol:
                 df = df.withColumn(pcol, F.lit(partition).cast("string"))
             return df
-        # group by partition value, re-attach the partition column.
-        # mergeSchema + allowMissingColumns = additive schema evolution:
-        # a later batch's new column reads as NULL on older files
-        # instead of being silently dropped by single-footer inference
         by_val: dict[tuple[str | None, str | None], list[str]] = {}
         for f in files:
             by_val.setdefault(parts.get(f, (None, None)), []).append(f)
+        return self._read_groups(by_val)
+
+    def read_batch(self, batch_id: str | int) -> DataFrame | None:
+        """The rows of ONE committed batch (its files only, partition
+        column re-attached)."""
+        e = self.committed_batches().get(str(batch_id))
+        if e is None:
+            return None
+        pcol = e.get("partition_by")
+        by_val: dict[tuple[str | None, str | None], list[str]] = {}
+        for rec in e.get("lineage", []):
+            by_val.setdefault((pcol, rec.get("partition")), []).append(rec["file"])
+        return self._read_groups(by_val) if by_val else None
+
+    def _read_groups(self, by_val: dict[tuple[str | None, str | None], list[str]]) -> DataFrame:
+        """One relation over ``{(partition_col, value): [files]}`` with
+        the partition column re-attached: the one-scan fast path when
+        the layout allows, else one relation per group, unioned.
+        allowMissingColumns = additive schema evolution: a later
+        batch's new column reads as NULL on older files instead of
+        being silently dropped by single-footer inference."""
         pcols = {pc for pc, _ in by_val}
         if len(pcols) == 1:
             fast = self._read_grouped(
@@ -316,38 +358,9 @@ class TableStore:
             if pcol is not None:
                 df = df.withColumn(pcol, F.lit(pval))
             frames.append(df)
-        out = frames[0]
-        for df in frames[1:]:
-            out = out.unionByName(df, allowMissingColumns=True)
-        return out
-
-    def read_batch(self, batch_id: str | int) -> DataFrame | None:
-        """The rows of ONE committed batch (its files only, partition
-        column re-attached) — the crash-repair path reads this instead
-        of re-running the whole transform on replay."""
-        e = self.committed_batches().get(str(batch_id))
-        if e is None:
-            return None
-        pcol = e.get("partition_by")
-        by_val: dict[str | None, list[str]] = {}
-        for rec in e.get("lineage", []):
-            by_val.setdefault(rec.get("partition"), []).append(rec["file"])
-        if by_val:
-            fast = self._read_grouped(by_val, pcol)
-            if fast is not None:
-                return fast
-        frames = []
-        for pval, fs in by_val.items():
-            df = self._read_files(fs)
-            if pcol is not None:
-                df = df.withColumn(pcol, F.lit(pval))
-            frames.append(df)
-        if not frames:
-            return None
-        out = frames[0]
-        for df in frames[1:]:
-            out = out.unionByName(df, allowMissingColumns=True)
-        return out
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+        )
 
     def delete_where(self, predicate: str) -> int:
         """Copy-on-write DELETE (M1/M2). Returns rows_affected.

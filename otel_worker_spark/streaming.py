@@ -16,9 +16,11 @@ shape, SURVEY §3.3). Exactly-once comes from two layers:
 - our sinks are idempotent by batch_id, so the replayed batch lands
   zero duplicate rows and re-emits the original receipt.
 
-The SpanAdded manifest table IS the notification stream: subscribers
-(the CLI debug client / MCP server in the reference) become readers
-tailing that table by batch_id.
+The spans commit log IS the notification stream: every committed
+batch is one SpanAdded event, and subscribers (the CLI debug client /
+MCP server in the reference) tail it by batch_id through the
+read-only manifest view (``PipelineStores.manifest``), whose rows are
+the batch's (trace_id, span_id) pairs.
 """
 
 from __future__ import annotations

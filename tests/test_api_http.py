@@ -332,6 +332,17 @@ def test_http_ingest_non_utf8_json_quarantines(server):
     assert json.loads(_req(base, "/v1/traces")[1]) == []
 
 
+def test_http_ingest_malformed_protobuf_is_400(server):
+    """Malformed protobuf wire bytes are a client error, as on the gRPC
+    path (INVALID_ARGUMENT): 400, nothing written."""
+    base, api = server
+    status, out, _ = _req(
+        base, "/v1/traces", "POST", b"\x0a\xff\x01", {"Content-Type": "application/x-protobuf"}
+    )
+    assert status == 400 and out == b""
+    assert api.stores.spans.committed_batches() == {}
+
+
 def test_http_auth_gate(spark, tmp_root):
     stores = PipelineStores(spark, tmp_root + "/stores-auth")
     api = TraceApi(spark, stores, service_lookup_df(spark), token=TOKEN)

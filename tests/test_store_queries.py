@@ -231,31 +231,104 @@ def test_commit_log_concurrent_writers(spark, tmp_root):
     assert len({e["batch_id"] for e in entries}) == n_threads * per_thread
 
 
-def test_replay_repairs_receipts_and_manifest(spark, tmp_root):
-    """ADVICE r1: a crash between the spans commit and the receipts/
-    manifest commits must be repaired on replay, not skipped past."""
-    import os
-    import shutil
+def _golden_tokens(spark, trace_id=None):
+    import json
 
-    from otel_worker_spark.fixtures import token_df_from_payloads, golden_trace_envelope
+    from otel_worker_spark.fixtures import golden_trace_envelope, token_df_from_payloads
 
-    stores = PipelineStores(spark, f"{tmp_root}/repair")
-    tok = token_df_from_payloads(spark, [golden_trace_envelope()])
-    lookup = service_lookup_df(spark)
-    ingest_batch(spark, tok, lookup, stores, batch_id=7)
-    assert "7" in stores.receipts.committed_batches()
+    env = golden_trace_envelope()
+    if trace_id is not None:
+        for sp in env["resourceSpans"][0]["scopeSpans"][0]["spans"]:
+            sp["traceId"] = trace_id
+    return token_df_from_payloads(spark, [json.dumps(env, separators=(",", ":"))])
 
-    # simulate the crash window: spans landed, receipts/manifest did not
-    for st in (stores.receipts, stores.manifest):
-        shutil.rmtree(st.log_dir)
-        os.makedirs(st.log_dir)
-    assert "7" not in stores.receipts.committed_batches()
 
-    r = ingest_batch(spark, tok, lookup, stores, batch_id=7)
-    assert r["skipped"] is True
-    assert "7" in stores.receipts.committed_batches()
-    assert "7" in stores.manifest.committed_batches()
-    assert stores.receipts.read().count() > 0
+def _sink_truth(stores, batch_id):
+    """(batch_id, sink, row_count, sum_n_tok) from the written rows."""
+    rows = (
+        stores.spans.read_batch(batch_id)
+        .filter("signal != 'quarantine'")
+        .groupBy("signal")
+        .agg(F.count("*").alias("n"), F.sum("n_tok").alias("tok"))
+        .collect()
+    )
+    return sorted((str(batch_id), r.signal, r.n, r.tok) for r in rows)
+
+
+def _receipt_rows(stores):
+    return sorted(tuple(r) for r in stores.receipts.read().collect())
+
+
+def test_one_commit_per_batch(spark, tmp_root):
+    """An ingest batch is one commit under the whole store root, and its
+    receipt carries the per-sink counts observed on the write."""
+    import glob
+
+    stores = PipelineStores(spark, f"{tmp_root}/one")
+    receipt = ingest_batch(spark, _golden_tokens(spark), service_lookup_df(spark), stores, 7)
+    assert len(glob.glob(f"{tmp_root}/one/**/_log/*.json", recursive=True)) == 1
+    truth = _sink_truth(stores, 7)
+    expected = {}
+    for sink in ("traces", "logs", "metrics"):
+        expected[f"{sink}.row_count"], expected[f"{sink}.sum_n_tok"] = 0, None
+    for _, sink, n, tok in truth:
+        expected[f"{sink}.row_count"], expected[f"{sink}.sum_n_tok"] = n, tok
+    assert receipt["observed"] == expected
+    assert _receipt_rows(stores) == truth
     assert stores.manifest.read().count() == 2  # golden trace has 2 spans
-    # spans themselves were NOT duplicated by the repair
+    replay = ingest_batch(spark, _golden_tokens(spark), service_lookup_df(spark), stores, 7)
+    assert replay["skipped"] is True and replay["observed"] == receipt["observed"]
+
+
+def test_crash_before_commit_leaves_nothing_visible(spark, tmp_root, monkeypatch):
+    """The commit is the batch's only publish: if it raises, spans,
+    receipts and manifest show nothing of the batch, and the rerun
+    ingests it exactly once."""
+    from otel_worker_spark import store as store_mod
+
+    stores = PipelineStores(spark, f"{tmp_root}/crash")
+    lookup = service_lookup_df(spark)
+
+    def crash(log_dir, entry):
+        raise OSError("crash before the commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(store_mod, "commit_json", crash)
+        with pytest.raises(OSError, match="crash before the commit"):
+            ingest_batch(spark, _golden_tokens(spark), lookup, stores, batch_id=7)
+    for view in (stores.spans, stores.receipts, stores.manifest):
+        assert "7" not in view.committed_batches()
+    assert stores.spans.read().count() == 0
+    assert stores.receipts.read().count() == 0
+    assert stores.manifest.read().count() == 0
+
+    r = ingest_batch(spark, _golden_tokens(spark), lookup, stores, batch_id=7)
+    assert r["skipped"] is False
     assert stores.spans.read().count() == 2
+    assert [e["batch_id"] for e in stores.spans.lineage()] == ["7"]
+    assert _receipt_rows(stores) == _sink_truth(stores, 7)
+    assert stores.manifest.read().count() == 2
+
+
+def test_receipts_survive_maintenance_and_truncate_empties_views(spark, tmp_root):
+    """Receipts are commit history: compaction and vacuum of the spans
+    files leave them as they were; a truncate empties both views."""
+    stores = PipelineStores(spark, f"{tmp_root}/maint")
+    lookup = service_lookup_df(spark)
+    ingest_batch(spark, _golden_tokens(spark), lookup, stores, "a")
+    ingest_batch(spark, _golden_tokens(spark, "cd" * 16), lookup, stores, "b")
+    before = _receipt_rows(stores)
+    assert before == sorted(_sink_truth(stores, "a") + _sink_truth(stores, "b"))
+    assert stores.spans.compact_small_files()["files_in"] > 0
+    assert stores.spans.vacuum(retention_seconds=0)["files"] > 0
+    assert _receipt_rows(stores) == before
+    assert [e["batch_id"] for e in stores.receipts.lineage()] == ["a", "b"]
+
+    stores.spans.truncate()
+    for view in (stores.receipts, stores.manifest):
+        assert view.committed_batches() == {}
+        assert view.lineage() == []
+        assert view.read().count() == 0
+    # the truncated batches still replay as no-ops
+    r = ingest_batch(spark, _golden_tokens(spark), lookup, stores, "a")
+    assert r["skipped"] is True and stores.receipts.read().count() == 0
