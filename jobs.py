@@ -31,12 +31,11 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import re
 import sys
 
 from otel_worker_spark.fixtures import service_lookup_df
 from otel_worker_spark.lineage import OffsetLog, ingest_directory
-from otel_worker_spark.parse import HEX_RE
+from otel_worker_spark.parse_arrow import valid_hex
 from otel_worker_spark.pipeline import PipelineStores, ingest_batch
 from otel_worker_spark.queries import NotFound, trace_get, traces_list
 from otel_worker_spark.session import get_spark
@@ -123,7 +122,7 @@ def cmd_delete_trace(args) -> None:
     # validate BEFORE interpolating into the predicate string — same
     # hex gate the parse stage enforces (reference rejects non-hex ids
     # at deserialization, data/models.rs:93-95)
-    if not re.fullmatch(HEX_RE.strip("^$"), args.trace_id or ""):
+    if not valid_hex(args.trace_id):
         print(json.dumps({"error": "trace-id must be lowercase hex"}))
         sys.exit(2)
     spark = get_spark("delete-trace")

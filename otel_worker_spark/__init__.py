@@ -4,13 +4,11 @@ A brand-new engine (NOT a port) with the query and data-processing
 capabilities of the reference `fiberplane/otel-worker` (a Rust OTLP
 collector, see /root/reference), re-expressed Spark-first:
 
-- parse:   one ``mapInArrow`` kernel (``parse_arrow``, the pipeline's
-           default) that detokenizes, parses and flattens each batch
-           into span rows (the reference's
-           ``Span::from_collector_request`` triple flatten,
-           otel-worker-core/src/api/models/otel.rs:49-118); ``parse`` is
-           the pure-Catalyst twin (``from_json`` + explode chain) and
-           ``proto`` the OTLP-protobuf kernel
+- parse:   one ``mapInArrow`` kernel (``parse_arrow``) that
+           detokenizes, parses and flattens each batch into span rows
+           (the reference's ``Span::from_collector_request`` triple
+           flatten, otel-worker-core/src/api/models/otel.rs:49-118);
+           ``proto`` feeds it from OTLP-protobuf wire bytes
 - enrich:  broadcast hash-join against service lookup dims
 - route:   per-signal sinks (traces / logs / metrics) as the partitions
            of one write, one commit per batch; the per-sink count + sum

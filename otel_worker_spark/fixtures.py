@@ -164,8 +164,8 @@ def token_sequences_from_events(
     """The graft input table, derived deterministically from ``events``.
 
     Fixture-generation path: the tokenize here is the pure-JVM
-    expression (no Python needed to *create* test data); the pipeline's
-    detokenize is the pandas UDF.
+    expression (no Python needed to *create* test data); the pipeline
+    detokenizes inside its Arrow parse kernel.
     """
     ev = events if events is not None else spark.read.parquet(f"{sf_dir}/events.parquet")
     payload = F.expr(render(payload_sql("spark"), "spark"))

@@ -1,28 +1,35 @@
-"""The Arrow parse engine: the whole parse stage in one mapInArrow
-kernel — the north rule's prescribed shape ("vectorized pandas/Arrow
-UDFs perform grok/regex-style parsing of serialized OTLP-like
-payloads reconstructed from token arrays, extract trace_id / span_id /
+"""The parse engine: the whole parse stage in one mapInArrow kernel —
+the north rule's prescribed shape ("vectorized pandas/Arrow UDFs
+perform grok/regex-style parsing of serialized OTLP-like payloads
+reconstructed from token arrays, extract trace_id / span_id /
 severity / resource attributes into typed columns").
 
-Contract: produces EXACTLY the same columns/values as the Catalyst
-engine in ``parse.py`` (``tests/test_parse_engines.py`` asserts
-frame equality row by row). Differences are purely physical:
+Reference semantics (SURVEY.md §2.2, ``Span::from_collector_request``,
+otel.rs:49-118): P1 the triple flatten with resource/scope context
+copied onto every span; P2 nanos → µs timestamps, out-of-range values
+quarantine instead of panicking; P3/P15 lowercased, validated hex ids;
+P4 empty parentSpanId → NULL; P5/P6 the kind/status strings, missing
+kind → ``Unspecified``; P7/P8 attribute maps key-sorted (BTreeMap)
+with values as untagged JSON strings; P9/P10 normalized events and
+links; P11/P12 the ``inner`` column, the full span as JSON text with
+RFC3339 UTC timestamps at µs precision. Invalid rows carry
+``is_valid=false`` and an ``invalid_reason`` instead of failing the
+batch — one poison payload must not kill the job.
 
-- one Python/Arrow stage instead of a ~10^3-node Catalyst expression
-  tree (which falls out of whole-stage codegen by sheer size and ends
-  up interpreted);
-- attribute-map sorting, untagged AnyValue encoding and the ``inner``
-  JSON come from ``json.dumps(..., sort_keys=True)`` — byte-compatible
-  with serialize.py's expressions by construction;
-- per-batch amortized: tokens → numpy bytes view → json.loads →
-  flatten loops, no Spark-side explode needed (the kernel emits one
-  output row per span).
+Contract: the frozen goldens of ``tests/test_parse_engines.py``
+(literal frames for golden, poison and wrong-typed payloads, per-column
+digests for an events-derived set) and the registry's DuckDB oracles
+(``pipeline_parse_spans``, ``pipeline_quarantine``), which compute the
+same answers straight from ``events``. Wrong-typed JSON follows the
+coercion rules of Spark's ``from_json`` with an explicit schema in
+PERMISSIVE mode (see the coercion helpers below), so a field of the
+wrong type nulls or coerces and never aborts the task.
 
-Both engines stay maintained: ``parse.parse_token_sequences`` is the
-pure-Catalyst declarative plan; this kernel is the measured-faster
-hot path (see bench.py) and the drop-in point for a real grok/regex
-stage. Scale characteristics: a narrow map, no shuffle, Arrow batch
-size bounds memory; Python worker parallelism = task parallelism.
+Shape: tokens → numpy bytes view → orjson → flatten loops; attribute
+maps, untagged AnyValue encoding and ``inner`` come from sorted-key
+compact JSON dumps; one output row per span, no Spark-side explode. A
+narrow map, no shuffle; the Arrow batch size bounds memory and Python
+worker parallelism is task parallelism.
 """
 
 from __future__ import annotations
@@ -36,8 +43,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .schemas import SPAN_KINDS, STATUS_CODES
-
-HEX_CHARS = set("0123456789abcdef")
 
 # orjson (baked into this image) parses UTF-8 bytes directly ~2× faster
 # than stdlib json and serializes compact/unescaped-unicode by default —
@@ -89,14 +94,13 @@ def _schema_for(cols: list[str]) -> str:
 OUTPUT_SCHEMA = None  # set below once _COLUMNS is defined
 
 
-# ---- from_json-parity coercions --------------------------------------------
-# The Catalyst engine reads payloads through from_json with an explicit
-# schema; PERMISSIVE mode has precise per-type coercion rules (probed
-# empirically, asserted by tests/test_parse_engines.py poison cases).
-# Every value pulled from the orjson/json decode goes through one of
-# these, so a wrong-typed field NEVER reaches pa.array (which would
-# abort the task — the poison-payload crash ADVICE r1 flagged); it
-# coerces or nulls exactly like the SQL engine.
+# ---- from_json coercions ---------------------------------------------------
+# Spark's from_json with an explicit schema in PERMISSIVE mode has
+# precise per-type coercion rules (probed empirically; the wrong-typed
+# and poison goldens of tests/test_parse_engines.py pin them). Every
+# value pulled from the orjson/json decode goes through one of these,
+# so a wrong-typed field NEVER reaches pa.array (which would abort the
+# task); it coerces or nulls the way from_json does.
 
 
 def _as_str(v):
@@ -176,12 +180,12 @@ def _as_structlist(v):
 def _anyvalue(v, depth: int = 3):
     """OTLP/JSON AnyValue → native Python (the untagged API encoding),
     mirroring From<any_value::Value> for AttributeValue
-    (otel-worker-core/src/api/models/otel.rs:269-292) with the SQL
-    engine's branch order and coercions: branches are taken on the
-    field value being non-null AFTER schema coercion, and a present-
-    but-uncastable intValue/bytesValue terminates its branch with null
+    (otel-worker-core/src/api/models/otel.rs:269-292) with from_json's
+    coercions: branches are taken on the field value being non-null
+    AFTER schema coercion, and a present-but-uncastable intValue/bytesValue terminates its branch with null
     rather than falling through. Recursion is bounded by ``depth``
-    exactly like the unrolled Catalyst schema (schemas.ANYVALUE_DEPTH)."""
+    (3 covers every fixture of the reference, including its serde
+    golden tests at otel.rs:320-384); deeper levels null out."""
     if not isinstance(v, dict):
         return None
     s = v.get("stringValue")
@@ -223,8 +227,8 @@ def _anyvalue(v, depth: int = 3):
 
 def _attrs_native(attrs, depth: int = 3) -> dict | None:
     """KeyValue list → key-sorted dict of native values (BTreeMap).
-    Null/keyless entries are dropped (a map key cannot be null — the
-    SQL engine filters them identically); duplicate keys keep the LAST
+    Null/keyless entries are dropped (a map key cannot be null);
+    duplicate keys keep the LAST
     value in input order (BTreeMap insert / LAST_WIN parity)."""
     attrs = _as_structlist(attrs)
     if attrs is None:
@@ -288,7 +292,8 @@ def _hex_id(s) -> str | None:
 _HEX_RE = __import__("re").compile(r"[0-9a-f]+\Z")
 
 
-def _valid_hex(s: str | None) -> bool:
+def valid_hex(s: str | None) -> bool:
+    """A well-formed id: non-empty, even-length, lowercase hex (P3)."""
     # fullmatch([0-9a-f]+) ≡ the set-inclusion check (non-empty, all
     # lowercase hex) at C speed — no per-call set allocation
     return (
@@ -301,12 +306,13 @@ def _valid_hex(s: str | None) -> bool:
 def _nanos_ts(v) -> datetime | None:
     """Decimal-string nanos → naive-UTC datetime at µs precision (P2).
 
-    Floor division like the SQL engine's DECIMAL path. Values whose
+    Floor division (exact integer ns → µs; a double would perturb
+    epoch nanos by ±1 µs). Values whose
     µs instant falls outside Python's datetime range (year 1..9999)
     quarantine here although Spark's TimestampType could hold a few
     more millennia — irrelevant in practice, noted for parity."""
-    v = _as_str(v)  # StringType coercion (JSON number → its text; the
-    # SQL engine then try_casts the text to long, so "1.5"/"true" null)
+    v = _as_str(v)  # StringType coercion (JSON number → its text; a
+    # text that is no integer, like "1.5" or "true", nulls)
     if v is None:
         return None
     try:
@@ -383,7 +389,10 @@ def _arrow_types():
 def parse_token_sequences_arrow(
     df: DataFrame, with_inner: bool = True, columns: list[str] | None = None
 ) -> DataFrame:
-    """Arrow-engine twin of ``parse.parse_token_sequences``.
+    """token_sequences(doc_id, tokens, n_tok, source) → flat span rows:
+    one row per wire span (plus all-null-span rows for undecodable
+    sequences and null/empty envelope levels) with the columns of
+    ``_COLUMNS``, ``is_valid`` and ``invalid_reason`` among them.
 
     Implemented over ``mapInArrow`` rather than ``mapInPandas``: the
     dominant cost of the stage is not parsing but moving the token
@@ -534,15 +543,15 @@ OUTPUT_SCHEMA = _schema_for(_COLUMNS)
 
 def _null_row(doc_id, _tokens, n_tok, source, reason, ctx: dict | None = None):
     """One all-null-span row (the explode_outer analog for a missing /
-    null level of the envelope). ``ctx`` carries the parent context the
-    SQL engine's correlated flatten keeps on such rows — resource
+    null level of the envelope). ``ctx`` carries the parent context a
+    correlated flatten keeps on such rows — resource
     attributes / service_name when scopeSpans is null, plus scope
     fields when spans is null."""
     base = dict.fromkeys(_COLUMNS)
     base.update(
         doc_id=doc_id, n_tok=n_tok, source=source,
         is_valid=False, invalid_reason=reason,
-        # the SQL engine's kind decode coalesces null → Unspecified
+        # the kind decode coalesces null → Unspecified
         # (data/models.rs:58) even on all-null quarantine rows
         kind="Unspecified",
     )
@@ -552,9 +561,9 @@ def _null_row(doc_id, _tokens, n_tok, source, reason, ctx: dict | None = None):
 
 
 def _parse_payload(doc_id, payload, n_tok, source, with_inner, need=frozenset(_HEAVY)) -> list[dict]:
-    # JSON-shape failures mirror the SQL engine: from_json PERMISSIVE
-    # yields a null-field struct, the explode_outer chain emits one
-    # null-span row, and the reason chain reports invalid_trace_id.
+    # JSON-shape failures follow from_json PERMISSIVE: a null-field
+    # struct, flattened (explode_outer) to one null-span row whose
+    # reason is invalid_trace_id.
     # Only token/UTF-8 failures are "undecodable_payload".
     # Every level follows the explode_outer contract: a null OR empty
     # array yields exactly one null-span row carrying the parent
@@ -735,11 +744,11 @@ def _span_row(
         severity = attrs_native["severity"]
 
     reason = None
-    if trace_id is None or not _valid_hex(trace_id):
+    if trace_id is None or not valid_hex(trace_id):
         reason = "invalid_trace_id"
-    elif span_id is None or not _valid_hex(span_id):
+    elif span_id is None or not valid_hex(span_id):
         reason = "invalid_span_id"
-    elif parent is not None and not _valid_hex(parent):
+    elif parent is not None and not valid_hex(parent):
         reason = "invalid_parent_span_id"
     elif name is None:
         reason = "missing_name"

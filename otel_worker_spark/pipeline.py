@@ -17,12 +17,14 @@ commit leaves nothing visible, and the rerun ingests the batch once.
 from __future__ import annotations
 
 import functools
+import os
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .enrich import enrich_spans
-from .parse import parse_token_sequences
+from .parse_arrow import parse_token_sequences_arrow
+from .proto import parse_token_sequences_protobuf
 from .route import SIGNALS, signal_expr
 from .store import TableStore
 
@@ -42,7 +44,9 @@ def sink_aggregates() -> dict[str, Column]:
 class SpansLogView:
     """A read-only table over the spans commit log: ``frame`` builds its
     rows from spans append entries. It owns no files and no log;
-    batches committed at or before the latest truncate are not listed."""
+    batches committed at or before the latest truncate are not listed.
+    ``frame`` may skip more: the manifest drops batches whose files
+    vacuum has reclaimed."""
 
     def __init__(
         self, spans: TableStore, frame: Callable[[TableStore, list[dict]], DataFrame]
@@ -94,9 +98,13 @@ def _receipts_frame(spans: TableStore, entries: list[dict]) -> DataFrame:
 
 def _manifest_frame(spans: TableStore, entries: list[dict]) -> DataFrame:
     """The SpanAdded event stream (api/models.rs:119-138): the routed
-    (trace_id, span_id) pairs of each batch, read from its own files."""
+    (trace_id, span_id) pairs of each batch, read from its own files.
+    A batch whose files vacuum has reclaimed (after a compaction
+    rewrote them) is not listed; its receipt stays."""
     frames = []
     for e in entries:
+        if not all(os.path.exists(rec["file"]) for rec in e.get("lineage", [])):
+            continue
         df = spans.read_batch(e["batch_id"])
         if df is not None:  # a batch without rows wrote no files
             frames.append(
@@ -143,7 +151,6 @@ _ROUTING_COLS = {
 def transform_batch(
     token_df: DataFrame,
     service_lookup: DataFrame,
-    depth: int = 3,
     with_inner: bool = True,
     engine: str = "arrow",
     columns: list[str] | None = None,
@@ -153,34 +160,20 @@ def transform_batch(
     batch jobs, the streaming wrapper, and tests alike — the
     reference's one-engine/thin-adapters shape (SURVEY §3.3).
 
-    ``engine`` picks the parse implementation: ``"arrow"`` (default —
-    the mapInArrow kernel, measured faster, see bench.py), ``"sql"``
-    (the pure-Catalyst declarative plan), or ``"protobuf"`` (S2: the
-    token bytes are ExportTraceServiceRequest wire format instead of
-    OTLP/JSON — same walker, same output contract). arrow/sql produce
-    identical frames (tests/test_parse_engines.py).
+    ``engine`` names the wire format of the token bytes: ``"arrow"``
+    (default — OTLP/JSON through the ``parse_arrow`` kernel) or
+    ``"protobuf"`` (S2: ExportTraceServiceRequest wire bytes — same
+    walker, same output contract).
 
     ``with_inner=False`` skips building the ``inner`` JSON column for
     read paths that don't need it (column pruning can't elide a
     projected expression)."""
+    parsers = {"arrow": parse_token_sequences_arrow, "protobuf": parse_token_sequences_protobuf}
+    if engine not in parsers:
+        raise ValueError(f"unknown parse engine {engine!r}; expected one of {sorted(parsers)}")
     if columns is not None:
         columns = sorted(set(columns) | _ROUTING_COLS)
-    if engine == "arrow":
-        from .parse_arrow import parse_token_sequences_arrow
-
-        parsed = parse_token_sequences_arrow(
-            token_df, with_inner=with_inner, columns=columns
-        )
-    elif engine == "protobuf":
-        from .proto import parse_token_sequences_protobuf
-
-        parsed = parse_token_sequences_protobuf(
-            token_df, with_inner=with_inner, columns=columns
-        )
-    else:
-        parsed = parse_token_sequences(token_df, depth=depth, with_inner=with_inner)
-        if columns is not None:
-            parsed = parsed.select(*[c for c in parsed.columns if c in set(columns)])
+    parsed = parsers[engine](token_df, with_inner=with_inner, columns=columns)
     enriched = enrich_spans(parsed, service_lookup)
     routed = enriched.withColumn(
         "signal",

@@ -5,8 +5,8 @@ DuckDB oracle SQL) pair.
 Three families:
 
 1. ``pipeline_*`` — run the REAL engine: derive token sequences from
-   the driver's ``events`` table, push them through tokenize →
-   detokenize (pandas UDF) → from_json → explode → normalize →
+   the driver's ``events`` table, push them through tokenize → the
+   Arrow parse kernel (detokenize, decode, flatten, normalize) →
    enrich → route, then query the result. The oracle computes the
    same answers DIRECTLY from ``events`` (fixtures.parsed_spans_sql),
    so a value-hash match proves the whole parse/route path —

@@ -1,23 +1,18 @@
-"""Schemas: the OTLP export envelope, the flat span row, the token table.
+"""Schemas: the span enum decodes and the token table.
 
 The reference's data model (see SURVEY.md §1):
 
 - wire envelope ``ExportTraceServiceRequest`` — triple-nested lists
   ``resourceSpans[] → scopeSpans[] → spans[]`` with a recursive
   ``AnyValue`` attribute sum type
-  (otel-worker-core/src/api/models/otel.rs:49-118, 257-292);
+  (otel-worker-core/src/api/models/otel.rs:49-118, 257-292), decoded
+  by the parse kernel (``parse_arrow``);
 - one persistent relation ``spans`` with typed key columns + the full
-  span as JSON text (otel-worker/migrations/20240708_create_spans.sql);
+  span as JSON text (otel-worker/migrations/20240708_create_spans.sql),
+  whose column order is ``pipeline.CANON_COLS``;
 - the graft input table of pre-tokenized sequences
   (BASELINE.json:input_hint): ``doc_id, tokens:array<int32>,
   n_tok:int32, source:string``.
-
-``AnyValue`` is recursive (Array-of-itself / Kvlist-of-itself);
-Spark StructTypes cannot be recursive, so we materialize it to a fixed
-``depth`` (default 3 — covers every fixture in the reference including
-its serde golden tests at otel.rs:320-384). Deeper payloads parse with
-inner levels left as nulls; raise ``depth`` if an installation needs
-more.
 """
 
 from __future__ import annotations
@@ -37,150 +32,6 @@ SPAN_KINDS = {
 #: Proto enum → string, otel-worker-core/src/api/models/otel.rs:216-230.
 STATUS_CODES = {0: "Unset", 1: "Ok", 2: "Error"}
 
-ANYVALUE_DEPTH = 3
-
-
-def anyvalue_schema(depth: int = ANYVALUE_DEPTH) -> T.StructType:
-    """OTLP JSON ``AnyValue`` unrolled to ``depth`` nesting levels.
-
-    Per the protobuf JSON mapping, ``intValue`` is a decimal *string*
-    (i64 doesn't fit JS numbers) and ``bytesValue`` is base64.
-    """
-    fields = [
-        T.StructField("stringValue", T.StringType()),
-        T.StructField("boolValue", T.BooleanType()),
-        T.StructField("intValue", T.StringType()),
-        T.StructField("doubleValue", T.DoubleType()),
-        T.StructField("bytesValue", T.StringType()),
-    ]
-    if depth > 1:
-        inner = anyvalue_schema(depth - 1)
-        fields.append(
-            T.StructField(
-                "arrayValue",
-                T.StructType([T.StructField("values", T.ArrayType(inner))]),
-            )
-        )
-        fields.append(
-            T.StructField(
-                "kvlistValue",
-                T.StructType([T.StructField("values", T.ArrayType(keyvalue_schema(depth - 1)))]),
-            )
-        )
-    return T.StructType(fields)
-
-
-def keyvalue_schema(depth: int = ANYVALUE_DEPTH) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("value", anyvalue_schema(depth)),
-        ]
-    )
-
-
-def attributes_schema(depth: int = ANYVALUE_DEPTH) -> T.ArrayType:
-    return T.ArrayType(keyvalue_schema(depth))
-
-
-def otlp_span_schema(depth: int = ANYVALUE_DEPTH) -> T.StructType:
-    """One wire span (otel-worker-core/src/api/models/otel.rs:85-117)."""
-    return T.StructType(
-        [
-            T.StructField("traceId", T.StringType()),
-            T.StructField("spanId", T.StringType()),
-            T.StructField("parentSpanId", T.StringType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("kind", T.IntegerType()),
-            T.StructField("traceState", T.StringType()),
-            T.StructField("flags", T.LongType()),
-            T.StructField("startTimeUnixNano", T.StringType()),
-            T.StructField("endTimeUnixNano", T.StringType()),
-            T.StructField("attributes", attributes_schema(depth)),
-            T.StructField(
-                "events",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("name", T.StringType()),
-                            T.StructField("timeUnixNano", T.StringType()),
-                            T.StructField("attributes", attributes_schema(depth)),
-                        ]
-                    )
-                ),
-            ),
-            T.StructField(
-                "links",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("traceId", T.StringType()),
-                            T.StructField("spanId", T.StringType()),
-                            T.StructField("traceState", T.StringType()),
-                            T.StructField("attributes", attributes_schema(depth)),
-                            T.StructField("flags", T.LongType()),
-                        ]
-                    )
-                ),
-            ),
-            T.StructField(
-                "status",
-                T.StructType(
-                    [
-                        T.StructField("code", T.IntegerType()),
-                        T.StructField("message", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-
-def otlp_envelope_schema(depth: int = ANYVALUE_DEPTH) -> T.StructType:
-    """``ExportTraceServiceRequest`` as OTLP/JSON (trace.json shape)."""
-    return T.StructType(
-        [
-            T.StructField(
-                "resourceSpans",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField(
-                                "resource",
-                                T.StructType([T.StructField("attributes", attributes_schema(depth))]),
-                            ),
-                            T.StructField(
-                                "scopeSpans",
-                                T.ArrayType(
-                                    T.StructType(
-                                        [
-                                            T.StructField(
-                                                "scope",
-                                                T.StructType(
-                                                    [
-                                                        T.StructField("name", T.StringType()),
-                                                        T.StructField("version", T.StringType()),
-                                                        T.StructField(
-                                                            "attributes", attributes_schema(depth)
-                                                        ),
-                                                    ]
-                                                ),
-                                            ),
-                                            T.StructField(
-                                                "spans", T.ArrayType(otlp_span_schema(depth))
-                                            ),
-                                        ]
-                                    )
-                                ),
-                            ),
-                        ]
-                    )
-                ),
-            )
-        ]
-    )
-
-
 #: Graft input table — exact shape from BASELINE.json:input_hint.
 TOKEN_SEQUENCES_SCHEMA = T.StructType(
     [
@@ -190,34 +41,3 @@ TOKEN_SEQUENCES_SCHEMA = T.StructType(
         T.StructField("source", T.StringType(), False),
     ]
 )
-
-#: Flat span sink — mirror of 20240708_create_spans.sql:1-16, plus the
-#: graft's carried-through ``doc_id/tokens/n_tok/source`` columns and
-#: the parsed context columns the reference denormalizes onto each span.
-SPAN_SINK_COLUMNS = [
-    "trace_id",
-    "span_id",
-    "parent_span_id",
-    "name",
-    "kind",
-    "start_time",
-    "end_time",
-    "trace_state",
-    "flags",
-    "scope_name",
-    "scope_version",
-    "status_code",
-    "status_message",
-    "severity",
-    "service_name",
-    "attributes",
-    "scope_attributes",
-    "resource_attributes",
-    "events",
-    "links",
-    "inner",
-    "doc_id",
-    "payload",  # exact input bytes (token-array equality ⇔ byte equality)
-    "n_tok",
-    "source",
-]

@@ -7,10 +7,9 @@ readers, one downstream transform (``pipeline.transform_batch``):
 
 - the graft's primary wire format: the pre-tokenized sequence table
   (``read_token_table`` / the streaming source in streaming.py);
-- plain OTLP/JSON files (S1): envelopes read with an explicit schema
-  (never inference — schema drift on 100 TB of JSON is a silent
-  corruption vector) and converted to token sequences so the SAME
-  pipeline ingests them;
+- plain OTLP/JSON files (S1): read as whole-file text and tokenized
+  byte for byte, so the SAME pipeline (and its parse kernel's
+  explicit coercion rules, never schema inference) ingests them;
 - OTLP protobuf (S2): gated stub — the ``opentelemetry-proto``
   wheel is not in this image; the decode slots into the same
   tokenize adapter when it is.
@@ -21,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import TOKEN_SEQUENCES_SCHEMA, otlp_envelope_schema
+from .schemas import TOKEN_SEQUENCES_SCHEMA
 from .tokens import tokenize_expr
 
 
@@ -46,16 +45,6 @@ def read_otlp_json(spark: SparkSession, path: str, source: str = "otlp-json") ->
         tokenize_expr(payload).alias("tokens"),
         F.octet_length(payload).cast("int").alias("n_tok"),
         F.lit(source).alias("source"),
-    )
-
-
-def read_otlp_json_lines(spark: SparkSession, path: str, source: str = "otlp-jsonl") -> DataFrame:
-    """S1 (columnar fast path): newline-delimited OTLP envelopes parsed
-    directly with the explicit envelope schema — when byte-level
-    token parity is not required, this skips the tokenize/detokenize
-    round-trip entirely and feeds the explode chain."""
-    return spark.read.schema(otlp_envelope_schema()).json(path).withColumn(
-        "source", F.lit(source)
     )
 
 

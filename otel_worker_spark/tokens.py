@@ -1,73 +1,22 @@
-"""Tokenize / detokenize between UTF-8 payload text and token arrays.
+"""Tokenize UTF-8 payload text into token arrays.
 
 The graft's wire format (BASELINE.json:input_hint) is a pre-tokenized
 sequence ``tokens:array<int32>``. The fixture vocabulary is the
 identity byte vocab (FIXTURES.md §1): ``tokens[i] = byte[i]`` of the
 UTF-8 payload, so token-array equality ⇔ payload byte equality, and
-both directions are deterministic and reversible.
+the mapping is deterministic and reversible.
 
-Two implementations of each direction:
-
-- a vectorized **pandas UDF** (Arrow batches; numpy ``uint8``
-  round-trip, no per-row Python beyond the list→bytes view) — the
-  production path mandated by the north rule;
-- a pure **JVM expression** (hex/encode/conv inside whole-stage
-  codegen) — kept for plan-comparison and as a zero-Python fallback.
-
-``bench.py`` measures both; the pandas UDF wins on wide payloads
-because the JVM variant pays a regex split per byte.
+``tokenize_expr`` is a pure JVM expression (hex/encode/conv inside
+whole-stage codegen), so fixtures and sources build token tables
+without a Python stage. The reverse direction lives in the parse
+kernel (``parse_arrow``), which reads the token column as a numpy
+byte view.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-@F.pandas_udf(T.StringType())
-def detokenize_udf(tokens: pd.Series) -> pd.Series:
-    """array<int32> → UTF-8 string via the identity byte vocab.
-
-    Arrow hands each cell as a numpy int array; ``astype(uint8)`` +
-    ``tobytes`` is a vectorized copy per row, no Python int loop.
-    Invalid UTF-8 or out-of-range tokens yield None (quarantine path —
-    the reference would 422 the request, handlers/otel.rs:25-28).
-    """
-
-    def one(arr) -> str | None:
-        if arr is None:
-            return None
-        try:
-            a = np.asarray(arr, dtype=np.int64)
-            if a.size and (a.min() < 0 or a.max() > 255):
-                return None
-            return a.astype(np.uint8).tobytes().decode("utf-8")
-        except (ValueError, UnicodeDecodeError):
-            return None
-
-    return tokens.map(one)
-
-
-@F.pandas_udf(T.ArrayType(T.IntegerType()))
-def tokenize_udf(payload: pd.Series) -> pd.Series:
-    """UTF-8 string → array<int32> (identity byte vocab)."""
-
-    def one(s) -> list | None:
-        if s is None:
-            return None
-        return np.frombuffer(s.encode("utf-8"), dtype=np.uint8).astype(np.int32)
-
-    return payload.map(one)
-
-
-def detokenize_expr(tokens: Column | str) -> Column:
-    """JVM-only detokenize: ints → hex pairs → unhex → decode UTF-8."""
-    c = F.col(tokens) if isinstance(tokens, str) else tokens
-    hexstr = F.concat_ws("", F.transform(c, lambda t: F.lpad(F.hex(t), 2, "0")))
-    return F.decode(F.unhex(hexstr), "UTF-8")
 
 
 def tokenize_expr(payload: Column | str) -> Column:

@@ -1,5 +1,6 @@
-"""Parse-stage tests — the analog of the reference's store round-trip
-and serde golden tests (otel-worker-cli/src/data/tests.rs:13-89,
+"""Parse-stage tests of the Arrow kernel — the analog of the
+reference's store round-trip and serde golden tests
+(otel-worker-cli/src/data/tests.rs:13-89,
 otel-worker-core/src/api/models/otel.rs:320-384)."""
 
 from __future__ import annotations
@@ -16,13 +17,20 @@ from otel_worker_spark.fixtures import (
     golden_trace_envelope,
     token_df_from_payloads,
 )
-from otel_worker_spark.parse import parse_token_sequences, split_quarantine
-from otel_worker_spark.tokens import detokenize_expr, tokenize_expr
+from otel_worker_spark.parse_arrow import parse_token_sequences_arrow
+from otel_worker_spark.tokens import tokenize_expr
+
+
+def split_quarantine(parsed):
+    """(valid spans, quarantined rows with their reason)."""
+    good = parsed.filter(F.col("is_valid")).drop("is_valid", "invalid_reason")
+    bad = parsed.filter(~F.col("is_valid")).drop("is_valid")
+    return good, bad
 
 
 def parse_one(spark, payloads, **kw):
     df = token_df_from_payloads(spark, payloads)
-    return parse_token_sequences(df, **kw)
+    return parse_token_sequences_arrow(df, **kw)
 
 
 def test_golden_trace_flatten(spark):
@@ -254,7 +262,7 @@ def test_quarantine_paths(spark):
     }
     rows = [(k, v, len(v), "probe") for k, v in cases.items()]
     df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int, source string")
-    good, bad = split_quarantine(parse_token_sequences(df))
+    good, bad = split_quarantine(parse_token_sequences_arrow(df))
     assert [r.doc_id for r in good.select("doc_id").distinct().collect()] == ["ok"]
     reasons = {r.doc_id: r.invalid_reason for r in bad.collect()}
     assert reasons["oob_token"] == "undecodable_payload"
@@ -265,20 +273,20 @@ def test_quarantine_paths(spark):
 
 def test_tokens_roundtrip_and_equality(spark):
     """The north-rule invariant: tokens survive the pipeline untouched
-    (token-array equality), and tokenize∘detokenize == identity for
-    both the pandas-UDF and pure-JVM implementations."""
+    (token-array equality), and the JVM tokenize of the payload text
+    reproduces the fixture's token array."""
     payload = json.dumps(golden_trace_envelope(), separators=(",", ":"))
     df = token_df_from_payloads(spark, [payload])
     orig = df.collect()[0].tokens
 
-    # JVM round trip
-    rt = df.select(tokenize_expr(detokenize_expr("tokens")).alias("t")).collect()[0].t
-    assert rt == orig
+    # JVM tokenize of the same text
+    text = spark.createDataFrame([(payload,)], "p string")
+    assert text.select(tokenize_expr("p").alias("t")).collect()[0].t == orig
 
     # pipeline carries the exact payload bytes through explode/
     # normalize untouched (token-array equality ⇔ byte equality under
     # the identity byte vocab — the payload column IS the tokens)
-    good, _ = split_quarantine(parse_token_sequences(df))
+    good, _ = split_quarantine(parse_token_sequences_arrow(df))
     for r in good.select("payload", "n_tok").collect():
         assert list(r.payload) == orig
         assert r.n_tok == len(orig)

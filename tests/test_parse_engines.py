@@ -1,57 +1,100 @@
-"""The two parse engines (Catalyst expressions vs Arrow mapInArrow
-kernel) must produce identical frames — same columns, same values,
-row for row — on golden, events-derived, and poison inputs."""
+"""The Arrow parse kernel (``parse_arrow``) against frozen goldens.
+
+``goldens/parse_kernel.json`` holds the kernel's frame for four input
+sets, in the normal form of ``_normal_form``: rows sorted by
+(``doc_id``, ``span_id``), every cell as its ``repr``. The golden,
+poison and wrong-typed sets are stored as literal cells; the 300-row
+events-derived set as one sha256 per column. The goldens were generated
+at the last commit that still carried a second, pure-Catalyst parse
+engine (``from_json`` + explode chain), where both engines produced
+these frames cell for cell. The DuckDB oracles of the registry
+(``pipeline_parse_spans``, ``pipeline_quarantine``,
+``pipeline_protobuf_*``) remain the independent check of the parse.
+
+Regenerate (only for a deliberate change of the parse contract):
+``PYTHONPATH=. python tests/test_parse_engines.py``
+"""
 
 from __future__ import annotations
 
+import hashlib
 import json
+import os
+
+import pytest
 
 from otel_worker_spark.fixtures import (
     golden_trace_envelope,
     token_df_from_payloads,
     token_sequences_from_events,
 )
-from otel_worker_spark.parse import parse_token_sequences
 from otel_worker_spark.parse_arrow import parse_token_sequences_arrow
 
 SF_DIR = "/root/testdata/sf0.001"
+GOLDENS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "goldens", "parse_kernel.json")
+
+#: sets whose golden is one sha256 per column instead of literal cells
+HASHED = {"events_derived"}
 
 
-def assert_engines_equal(df, with_inner=True):
-    a = (
-        parse_token_sequences(df, with_inner=with_inner)
-        .toPandas()
+def _normal_form(parsed) -> dict[str, list[str]]:
+    """column → the repr of each cell, rows sorted by (doc_id, span_id).
+    repr, not str: the payload column holds raw bytes that need not be
+    valid UTF-8."""
+    pdf = (
+        parsed.toPandas()
         .sort_values(["doc_id", "span_id"], na_position="first")
         .reset_index(drop=True)
     )
-    b = (
-        parse_token_sequences_arrow(df, with_inner=with_inner)
-        .toPandas()[a.columns]
-        .sort_values(["doc_id", "span_id"], na_position="first")
-        .reset_index(drop=True)
-    )
-    assert len(a) == len(b)
-    for c in a.columns:
-        # map(repr), not astype(str): the payload column holds raw
-        # bytes that need not be valid UTF-8
-        av, bv = a[c].map(repr), b[c].map(repr)
-        assert av.equals(bv), (
-            f"column {c} differs:\n sql:   {av[av != bv].head(3).tolist()}"
-            f"\n arrow: {bv[av != bv].head(3).tolist()}"
-        )
+    return {c: pdf[c].map(repr).tolist() for c in pdf.columns}
 
 
-def test_engines_equal_golden(spark):
-    assert_engines_equal(token_df_from_payloads(spark, [golden_trace_envelope()]))
+def _digest(cells: list[str]) -> str:
+    return hashlib.sha256("\n".join(cells).encode()).hexdigest()
 
 
-def test_engines_equal_events_derived(spark):
-    tok = token_sequences_from_events(spark, SF_DIR).limit(300)
-    assert_engines_equal(tok)
-    assert_engines_equal(tok, with_inner=False)
+def _golden_entry(name: str, cols: dict[str, list[str]]) -> dict:
+    n_rows = len(next(iter(cols.values())))
+    if name in HASHED:
+        return {"rows": n_rows, "sha256": {c: _digest(v) for c, v in cols.items()}}
+    return {"rows": n_rows, "cells": cols}
 
 
-def test_engines_equal_poison(spark):
+def assert_matches_golden(df, name: str, with_inner: bool = True) -> None:
+    """The kernel's frame of ``df`` equals golden set ``name``; with
+    ``with_inner=False`` the same frame with ``inner`` null."""
+    with open(GOLDENS) as f:
+        want = json.load(f)[name]
+    got = _normal_form(parse_token_sequences_arrow(df, with_inner=with_inner))
+    if not with_inner:
+        inner = got.pop("inner")
+        assert set(inner) == {"None"}, f"inner not null: {sorted(set(inner))[:3]}"
+    got_entry = _golden_entry(name, got)
+    assert got_entry["rows"] == want["rows"]
+    key = "sha256" if name in HASHED else "cells"
+    want_cols = {c: v for c, v in want[key].items() if with_inner or c != "inner"}
+    assert sorted(got_entry[key]) == sorted(want_cols)
+    for c, v in want_cols.items():
+        g = got_entry[key][c]
+        if name in HASHED:
+            assert g == v, f"column {c} differs from its golden digest"
+        else:
+            diff = [i for i, (a, b) in enumerate(zip(v, g)) if a != b]
+            assert not diff, (
+                f"column {c} differs at rows {diff[:3]}:\n golden: {[v[i] for i in diff[:3]]}"
+                f"\n kernel: {[g[i] for i in diff[:3]]}"
+            )
+
+
+def _golden_input(spark):
+    return token_df_from_payloads(spark, [golden_trace_envelope()])
+
+
+def _events_input(spark):
+    return token_sequences_from_events(spark, SF_DIR).limit(300)
+
+
+def _poison_input(spark):
     good = json.dumps(golden_trace_envelope(), separators=(",", ":"))
     rows = [
         ("ok", list(good.encode())),
@@ -115,11 +158,10 @@ def test_engines_equal_poison(spark):
             ),
         ),
     ]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         [(n, t, len(t), "probe") for n, t in rows],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    assert_engines_equal(df)
 
 
 def _span_env(span: dict, resource: dict | None = None, scope: dict | None = None) -> bytes:
@@ -131,10 +173,9 @@ def _span_env(span: dict, resource: dict | None = None, scope: dict | None = Non
     return json.dumps({"resourceSpans": [rs]}, separators=(",", ":")).encode()
 
 
-def test_engines_equal_wrong_typed_fields(spark):
-    """ADVICE r1 (high): wrong-typed scalar fields must coerce/null the
-    way from_json does — never abort the Arrow task — and both engines
-    must agree on every column, including quarantine routing."""
+def _wrong_typed_input(spark):
+    """Wrong-typed scalars, arrays, attribute entries and envelope
+    levels, one payload each."""
     base = {
         "traceId": "ab" * 16,
         "spanId": "cd" * 8,
@@ -213,7 +254,7 @@ def test_engines_equal_wrong_typed_fields(spark):
             resource={"attributes": [{"key": "service.name", "value": {"stringValue": "ctx"}}]},
             scope={"name": 7, "version": True},
         ).replace(b'"spans":[', b'"spans":[null,'),
-        # deep nesting: depth-4 kvlist levels null out in BOTH engines
+        # deep nesting: depth-4 kvlist levels null out (AnyValue depth 3)
         _span_env({**base, "attributes": [
             {"key": "deep", "value": {"kvlistValue": {"values": [
                 {"key": "l2", "value": {"kvlistValue": {"values": [
@@ -224,12 +265,50 @@ def test_engines_equal_wrong_typed_fields(spark):
             ]}}},
         ]}),
     ]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         [(f"wt-{i:03d}", list(p), len(p), "probe") for i, p in enumerate(payloads)],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    assert_engines_equal(df)
-    assert_engines_equal(df, with_inner=False)
+
+
+INPUTS = {
+    "golden": _golden_input,
+    "events_derived": _events_input,
+    "poison": _poison_input,
+    "wrong_typed": _wrong_typed_input,
+}
+
+
+def test_goldens_golden_envelope(spark):
+    assert_matches_golden(_golden_input(spark), "golden")
+
+
+def test_goldens_events_derived(spark):
+    tok = _events_input(spark)
+    assert_matches_golden(tok, "events_derived")
+    assert_matches_golden(tok, "events_derived", with_inner=False)
+
+
+def test_goldens_poison(spark):
+    assert_matches_golden(_poison_input(spark), "poison")
+
+
+def test_goldens_wrong_typed_fields(spark):
+    """Wrong-typed scalar fields coerce or null the way ``from_json``
+    does (never abort the Arrow task), including quarantine routing."""
+    df = _wrong_typed_input(spark)
+    assert_matches_golden(df, "wrong_typed")
+    assert_matches_golden(df, "wrong_typed", with_inner=False)
+
+
+def test_transform_batch_rejects_unknown_engine(spark):
+    from otel_worker_spark.fixtures import service_lookup_df
+    from otel_worker_spark.pipeline import transform_batch
+
+    tok = _golden_input(spark)
+    for engine in ("sql", "json", ""):
+        with pytest.raises(ValueError, match="engine"):
+            transform_batch(tok, service_lookup_df(spark), engine=engine)
 
 
 def test_arrow_kernel_sliced_tokens_ignore_hidden_values(monkeypatch):
@@ -301,3 +380,20 @@ def test_protobuf_kernel_sliced_tokens_ignore_hidden_values(monkeypatch):
     monkeypatch.setattr(PA, "_segment_bytes", slow_path)
     got = pa.Table.from_batches(list(kernel(iter([sliced]))))
     assert got.num_rows == 4 and got.equals(want)
+
+
+def write_goldens(spark) -> None:
+    os.makedirs(os.path.dirname(GOLDENS), exist_ok=True)
+    out = {
+        name: _golden_entry(name, _normal_form(parse_token_sequences_arrow(make(spark))))
+        for name, make in INPUTS.items()
+    }
+    with open(GOLDENS, "w") as f:
+        json.dump(out, f, indent=0, sort_keys=True)
+        f.write("\n")
+
+
+if __name__ == "__main__":
+    from otel_worker_spark.session import get_spark
+
+    write_goldens(get_spark(app_name="parse-goldens", shuffle_partitions=8))

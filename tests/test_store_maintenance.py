@@ -182,6 +182,30 @@ def test_time_travel_reads_past_snapshots(spark, tmp_root):
     assert st.read().count() == 0
 
 
+@pytest.mark.parametrize("trace_id", ["ABCD", "abc", "", "ab' OR '1'='1"])
+def test_delete_trace_cli_rejects_bad_ids_before_any_session(trace_id, monkeypatch, capsys):
+    """`jobs.py delete-trace` interpolates the id into a delete
+    predicate, so it takes only the parse stage's well-formed ids
+    (lowercase, even-length hex) and exits 2 before building a
+    session for anything else."""
+    import json
+    import sys
+
+    import jobs
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a session was built for a rejected trace id")
+
+    monkeypatch.setattr(jobs, "get_spark", no_session)
+    monkeypatch.setattr(
+        sys, "argv", ["jobs.py", "delete-trace", "--stores", "unused", "--trace-id", trace_id]
+    )
+    with pytest.raises(SystemExit) as exited:
+        jobs.main()
+    assert exited.value.code == 2
+    assert "error" in json.loads(capsys.readouterr().out)
+
+
 def test_optimize_cli_bucket_flag(spark, tmp_root, capsys):
     """`jobs.py optimize --bucket PATH` (r3 verdict item 7): the one
     CLI call that compacts + vacuums the store set AND rewrites the

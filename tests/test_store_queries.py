@@ -312,7 +312,9 @@ def test_crash_before_commit_leaves_nothing_visible(spark, tmp_root, monkeypatch
 
 def test_receipts_survive_maintenance_and_truncate_empties_views(spark, tmp_root):
     """Receipts are commit history: compaction and vacuum of the spans
-    files leave them as they were; a truncate empties both views."""
+    files leave them as they were. The manifest drops the batches whose
+    files vacuum reclaimed and lists later ones; a truncate empties
+    both views."""
     stores = PipelineStores(spark, f"{tmp_root}/maint")
     lookup = service_lookup_df(spark)
     ingest_batch(spark, _golden_tokens(spark), lookup, stores, "a")
@@ -323,6 +325,12 @@ def test_receipts_survive_maintenance_and_truncate_empties_views(spark, tmp_root
     assert stores.spans.vacuum(retention_seconds=0)["files"] > 0
     assert _receipt_rows(stores) == before
     assert [e["batch_id"] for e in stores.receipts.lineage()] == ["a", "b"]
+    assert stores.manifest.read().count() == 0
+    assert stores.manifest.read_batch("a").count() == 0
+    ingest_batch(spark, _golden_tokens(spark, "ef" * 16), lookup, stores, "c")
+    manifest = stores.manifest.read().collect()
+    assert {r.batch_id for r in manifest} == {"c"}
+    assert {r.trace_id for r in manifest} == {"ef" * 16} and len(manifest) == 2
 
     stores.spans.truncate()
     for view in (stores.receipts, stores.manifest):
