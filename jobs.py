@@ -17,6 +17,7 @@ Run on a cluster as:
         [--mixture --rates-out /data/rates]
     spark-submit ... jobs.py ann-build --embeddings /data/emb --index /data/ann
     spark-submit ... jobs.py ann-serve --embeddings /data/emb --index /data/ann --k 5
+    python jobs.py mcp --stores /data/otel   (MCP JSON-RPC over stdin/stdout)
     spark-submit ... jobs.py bench           (local benchmarking, see bench.py)
 
 Local mode works identically (the session factory picks master from
@@ -189,8 +190,8 @@ def cmd_token_curate(args) -> None:
         # α=1/2 temperature mixture over the POST-gate corpus: the
         # gate decides admissibility, the mixture decides volume.
         # Rates are frozen from this snapshot (and optionally
-        # persisted — the artifact streaming.sample_gate_stream
-        # serves), then the deterministic md5-uniform gate thins.
+        # persisted with --rates-out), then the deterministic
+        # md5-uniform gate thins.
         rates = tks.sample_rates(tks.mixture_weights(kept_tok))
         if args.rates_out:
             rates.write.mode("errorifexists").option(
@@ -337,6 +338,21 @@ def cmd_serve(args) -> None:
         srv.shutdown()
         if grpc_srv is not None:
             grpc_srv.shutdown()
+
+
+def cmd_mcp(args) -> None:
+    """The reference's `otel-worker mcp` (mcp.rs:545-551): one MCP
+    session as newline-delimited JSON-RPC over stdin/stdout, over the
+    same query layer `serve` fronts. Returns when stdin closes. No
+    bearer token: the stores are read in-process, and whoever spawns
+    the process owns its stdio."""
+    from otel_worker_spark.api import TraceApi
+    from otel_worker_spark.mcp import McpServer
+
+    spark = get_spark("mcp")
+    stores = _stores(spark, args.stores)
+    api = TraceApi(spark, stores, service_lookup_df(spark))
+    McpServer(api).serve_stdio(sys.stdin, sys.stdout)
 
 
 def cmd_package(args) -> None:
@@ -525,7 +541,7 @@ def main() -> None:
                           "md5-uniform sampling, ops/token_stats)")
     ptc.add_argument("--rates-out",
                      help="with --mixture: persist the frozen per-source "
-                          "rate table (the streaming gate's static dim)")
+                          "rate table")
     ptc.set_defaults(fn=cmd_token_curate)
 
     pab = sub.add_parser("ann-build")
@@ -564,6 +580,10 @@ def main() -> None:
         help="also serve OTLP/gRPC over real HTTP/2 (h2c) on this port",
     )
     ps.set_defaults(fn=cmd_serve)
+
+    pmc = sub.add_parser("mcp")
+    pmc.add_argument("--stores", required=True)
+    pmc.set_defaults(fn=cmd_mcp)
 
     pp = sub.add_parser("package")
     pp.add_argument("--out", default="otel_worker_spark.zip")

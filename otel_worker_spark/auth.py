@@ -2,17 +2,9 @@
 
 The reference guards every HTTP route with one middleware: take the
 ``Authorization`` header (missing/unparsable → ""), split on the FIRST
-space, require exactly ``("Bearer", <expected>)``, else 401. In this
-engine the transport is a batch/stream of payload rows, so the same
-gate appears in two shapes:
-
-- ``check_bearer`` — the exact scalar decision, for adapters that sit
-  in front of ``ingest_batch`` (one request = one batch);
-- ``split_authorized`` — the set-oriented version for a source table
-  that carries an ``authorization`` column per request row: authorized
-  rows flow to the pipeline, the rest become 401 receipts (the
-  reference rejects the whole request; per-row is the batch analog of
-  per-request).
+space, require exactly ``("Bearer", <expected>)``, else 401.
+``check_bearer`` is that decision; ``api.serve`` applies it to every
+HTTP route (gRPC Export stays ungated, as in the reference).
 
 Constant-time comparison (hmac.compare_digest) — the reference's
 ``token == expected_token`` is a plain compare, but an engine-side
@@ -22,11 +14,6 @@ gate should not leak token prefixes through timing.
 from __future__ import annotations
 
 import hmac
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-UNAUTHORIZED = 401
 
 
 def check_bearer(auth_header: str | None, expected_token: str) -> bool:
@@ -40,22 +27,3 @@ def check_bearer(auth_header: str | None, expected_token: str) -> bool:
         return False
     return hmac.compare_digest(token, expected_token)
 
-
-def split_authorized(
-    df: DataFrame, expected_token: str, col: str = "authorization"
-) -> tuple[DataFrame, DataFrame]:
-    """(authorized rows, rejected rows) for a request table carrying a
-    bearer header column. The predicate is a pure Catalyst expression
-    (split-once + literal equality) — no Python in the row path; the
-    constant-time property is irrelevant here because the comparison
-    happens executor-side against a broadcast literal, not against an
-    attacker-observable response channel per candidate token."""
-    header = F.coalesce(F.col(col), F.lit(""))
-    # split on the FIRST space only: scheme = text before it, token =
-    # everything after (preserving later spaces, like split_once)
-    idx = F.instr(header, " ")
-    scheme = F.when(idx > 0, F.substring_index(header, " ", 1))
-    token = F.when(idx > 0, F.expr(f"substring(coalesce({col}, ''), instr(coalesce({col}, ''), ' ') + 1)"))
-    ok = (scheme == F.lit("Bearer")) & (token == F.lit(expected_token))
-    ok = F.coalesce(ok, F.lit(False))
-    return df.filter(ok), df.filter(~ok).withColumn("status", F.lit(UNAUTHORIZED))

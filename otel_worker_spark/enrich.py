@@ -36,24 +36,6 @@ def _salt_col(df: DataFrame, salt_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_buckets))
 
 
-def salted_repartition(df: DataFrame, key: str, salt_buckets: int, n_partitions: int | None = None) -> DataFrame:
-    """Salt a skewed partition key (the hot ``source`` — one service
-    can dominate an OTEL stream) before a repartition, so no single
-    task owns the hot key's entire volume.
-
-    Downstream per-key aggregates must either aggregate partially on
-    (key, salt) then re-aggregate on key (two-phase), or rely on AQE
-    skew handling; this helper is the explicit variant for writes
-    where we just need balanced files.
-    """
-    salted = df.withColumn("_salt", _salt_col(df, salt_buckets))
-    if n_partitions:
-        out = salted.repartition(n_partitions, F.col(key), F.col("_salt"))
-    else:
-        out = salted.repartition(F.col(key), F.col("_salt"))
-    return out.drop("_salt")
-
-
 def two_phase_count_sum(df: DataFrame, key: str, sum_col: str, salt_buckets: int = 16) -> DataFrame:
     """Skew-proof groupBy(key).agg(count, sum) — phase 1 aggregates on
     (key, salt) so the hot key is split across ``salt_buckets`` tasks,

@@ -409,23 +409,7 @@ def ivfpq_serve_topk(
         f_c = pool.submit(_read_coarse_matrix, spark, root)
         f_cb = pool.submit(_read_codebooks, spark, root)
         qrows, C, cbs = f_q.result(), f_c.result(), f_cb.result()
-    return ivfpq_serve_rows(spark, root, qrows, k, n_probe, _model=(C, cbs))
-
-
-def ivfpq_serve_queries(
-    queries: DataFrame,
-    root: str,
-    k: int = SERVE_K,
-    n_probe: int = sim.IVFPQ_PROBE,
-) -> DataFrame:
-    """Serve an EXPLICIT query frame (vec_id, embedding) from the
-    persisted index — the entry point streaming serving uses per
-    micro-batch. The collect is bounded by the query batch, not the
-    corpus (per-query LUT construction is driver-side by design — the
-    same work a serving coordinator does per request)."""
-    qrows = queries.select("vec_id", "embedding").collect()
-    return ivfpq_serve_rows(queries.sparkSession, root, qrows, k, n_probe)
-
+    return ivfpq_serve_rows(spark, root, qrows, C, cbs, k, n_probe)
 
 
 def _local_frame(spark: SparkSession, rows, cols: list[str], schema: str):
@@ -452,15 +436,11 @@ def ivfpq_serve_rows(
     spark: SparkSession,
     root: str,
     qrows,
+    C,
+    cbs,
     k: int = SERVE_K,
     n_probe: int = sim.IVFPQ_PROBE,
-    _model=None,
 ) -> DataFrame:
-    if _model is not None:
-        C, cbs = _model
-    else:
-        C = _read_coarse_matrix(spark, root)
-        cbs = _read_codebooks(spark, root)
     m = len(cbs)
     probe_rows = sim._ivfpq_query_probes(qrows, C, cbs, n_probe)
     probes = _local_frame(
@@ -491,52 +471,6 @@ def ivfpq_serve_rows(
     )
 
 
-# ------------------------------------------- incremental maintenance
-#
-# A production index ingests new vectors daily without retraining:
-# assign/encode the NEW batch against the PERSISTED model and append
-# — one narrow pass over the batch, an atomic idempotent-by-batch_id
-# commit, existing lists untouched. (The registry facades above manage
-# their indexes via the staleness marker and full rebuild; appended
-# indexes are caller-managed roots — the marker deliberately does not
-# track appends.) Quantization drift (centroids going stale as the
-# distribution shifts) is handled the way real deployments do: rebuild
-# on schedule with the builders above.
-
-
-def _read_centroids(spark: SparkSession, root: str) -> list[tuple[int, list[int]]]:
-    rows = TableStore(spark, os.path.join(root, "centroids")).read().collect()
-    return sorted((int(r.cent_id), [int(x) for x in r.c]) for r in rows)
-
-
-def append_ivf_postings(
-    new_embeddings: DataFrame, root: str, batch_id: str | int
-) -> dict:
-    """Assign a NEW embedding batch to the existing trained centroids
-    (same literal argmax fold as the build) and append the postings.
-    Returns the commit receipt; replaying a batch_id is a no-op."""
-    spark = new_embeddings.sparkSession
-    cents = _read_centroids(spark, root)
-    lits = [
-        (cid, sim._scaled_arr_lit(v), sim._norm_lit([x / 1000000.0 for x in v]))
-        for cid, v in cents
-    ]
-    postings = (
-        new_embeddings.select("vec_id", "embedding")
-        .withColumn("__nrm", F.expr(sim._norm_expr("embedding")))
-        .select(
-            (-sim._argmax_centroid("embedding", lits, "__nrm")["neg_cent"]).alias(
-                "cent_id"
-            ),
-            "vec_id",
-            "embedding",
-        )
-    )
-    return TableStore(spark, os.path.join(root, "postings")).append(
-        postings, batch_id, partition_by="cent_id"
-    )
-
-
 def _read_codebooks(spark: SparkSession, root: str):
     import numpy as np
 
@@ -550,37 +484,6 @@ def _read_codebooks(spark: SparkSession, root: str):
         np.array([by_j[j][c] for c in range(ksub)], dtype=np.int64)
         for j in range(m)
     ]
-
-
-def append_pq_codes(
-    new_embeddings: DataFrame, root: str, batch_id: str | int
-) -> dict:
-    """Encode a NEW batch with the persisted PQ codebooks (zero-
-    exchange Arrow pass) and append to the codes table."""
-    spark = new_embeddings.sparkSession
-    cbs = [cb.tolist() for cb in _read_codebooks(spark, root)]
-    codes = sim.pq_encode_broadcast(new_embeddings, cbs)
-    return TableStore(spark, os.path.join(root, "codes")).append(codes, batch_id)
-
-
-def append_ivfpq_codes(
-    new_embeddings: DataFrame, root: str, batch_id: str | int
-) -> dict:
-    """Coarse-assign + residual-encode a NEW batch with the persisted
-    IVF+PQ model and append to the partitioned codes table."""
-    import numpy as np
-
-    spark = new_embeddings.sparkSession
-    coarse = TableStore(spark, os.path.join(root, "coarse")).read().collect()
-    C = np.array(
-        [v for _, v in sorted((int(r.cent_id), [int(x) for x in r.cv]) for r in coarse)],
-        dtype=np.int64,
-    )
-    cbs = _read_codebooks(spark, root)
-    encoded = sim.ivfpq_encode(new_embeddings, C, cbs)
-    return TableStore(spark, os.path.join(root, "codes")).append(
-        encoded, batch_id, partition_by="cent_id"
-    )
 
 
 # ------------------------------------------------------ registry facade

@@ -35,14 +35,8 @@ def spread(df: DataFrame) -> DataFrame:
 MERSENNE31 = 2_147_483_647
 
 
-def hash31(c: Column, seed: str = "") -> Column:
-    """Deterministic 31-bit hash of a string column (Spark side)."""
-    h = F.conv(F.substring(F.md5(F.concat(F.lit(seed), c)), 1, 15), 16, 10).cast("long")
-    return h % MERSENNE31
-
-
 def hash31_sql(expr: str, seed: str = "") -> str:
-    """Same hash, DuckDB dialect."""
+    """Deterministic 31-bit hash of a string expression, DuckDB dialect."""
     return (
         f"(('0x' || substr(md5('{seed}' || {expr}), 1, 15))::BIGINT % {MERSENNE31})"
     )
@@ -68,12 +62,4 @@ def shingles_expr(col: str, k: int = 5) -> Column:
                 f" i -> substring({col}, i, {k}))"
             )
         )
-    )
-
-
-def shingles_sql(col: str, k: int = 5) -> str:
-    """Same shingle set, DuckDB list comprehension."""
-    return (
-        f"list_sort(list_distinct([substr({col}, i, {k}) "
-        f"for i in range(1, greatest(1, len({col}) - {k - 1}) + 1)]))"
     )

@@ -14,10 +14,10 @@ Scale shapes (the 100 TB story, per op):
 
 - ``pack_chunks``: one window aggregation PARTITIONED BY source — the
   classic "concat and chunk" LM packing (GPT-style). Each source packs
-  independently and in parallel; a production layout shards hot
-  sources into (source, shard) buckets so no window partition exceeds
-  executor memory, then stitches shard boundaries with one tiny
-  per-shard offset pass (same cumsum algebra, applied to shard totals).
+  independently and in parallel. One hot source is one window
+  partition; bounding it would take (source, shard) buckets stitched
+  by a tiny per-shard offset pass (the same cumsum algebra, applied
+  to shard totals), which is not implemented.
 - ``quality_filter`` / ``split_assign`` / ``pii_redact``: narrow maps,
   zero shuffle, pipeline with any downstream op.
 - ``ngram_topk``: explode → partial+final hash agg → TakeOrdered; the
@@ -39,7 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .common import MERSENNE31
 from .text import STOPWORDS, _grams_expr, _grams_sql
 
 #: whitespace words, empties dropped (Spark / DuckDB twins)
@@ -117,96 +116,6 @@ SELECT source, chunk_id, doc_id, n_tokens,
        least(cum_end, (chunk_id + 1) * {capacity}) - greatest(cum_start, chunk_id * {capacity}) AS n_in_chunk
 FROM s
 """
-
-
-#: documents per shard for the sharded (hot-source) packing path
-PACK_SHARD_DOCS = 256
-
-
-def pack_chunks_sharded(
-    documents: DataFrame,
-    capacity: int = PACK_CAPACITY,
-    shard_docs: int = PACK_SHARD_DOCS,
-) -> DataFrame:
-    """The PRODUCTION form of ``pack_chunks`` for hot sources — the
-    shard-stitching recipe the module docstring describes, implemented
-    and proven (tests pin result equality with the unsharded op).
-
-    ``pack_chunks`` runs one cumsum window PARTITIONED BY source; a
-    source with 10^9 documents makes that partition a single task.
-    Here the window key is ``(source, shard)`` with ``shard =
-    doc_id div shard_docs`` — monotone in doc_id, so per-source doc
-    order is preserved across shards and every window partition is
-    bounded by ``shard_docs`` rows. The global offsets come back via
-    one TINY aggregate (one row per shard — |corpus| / shard_docs) that
-    cumsums shard totals per source and BROADCASTS to the main path:
-
-        local cumsum (bounded window)
-          + shard_base (broadcast join)  =  the exact global cumsum
-
-    Identical output, no unbounded partition anywhere; the same
-    two-level algebra stitches any prefix-sum-shaped op at scale.
-    """
-    shard = F.expr(f"doc_id div {shard_docs}")
-    base = (
-        documents.select(
-            "doc_id",
-            "source",
-            F.expr(f"size({_WORDS})").cast("long").alias("n_tokens"),
-        )
-        .where(F.col("n_tokens") > 0)
-        .withColumn("shard", shard)
-    )
-    w_local = (
-        Window.partitionBy("source", "shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = base.withColumn("local_end", F.sum("n_tokens").over(w_local))
-    # one row per (source, shard): cumulative token count of all PRIOR
-    # shards of the same source — tiny, exchanges ~|corpus|/shard_docs rows
-    w_shard = (
-        Window.partitionBy("source")
-        .orderBy("shard")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    offsets = (
-        base.groupBy("source", "shard")
-        .agg(F.sum("n_tokens").alias("shard_tokens"))
-        .withColumn(
-            "shard_base", F.sum("shard_tokens").over(w_shard) - F.col("shard_tokens")
-        )
-        .select("source", "shard", "shard_base")
-    )
-    stitched = local.join(F.broadcast(offsets), ["source", "shard"]).select(
-        "source",
-        "doc_id",
-        "n_tokens",
-        (F.col("shard_base") + F.col("local_end")).alias("cum_end"),
-        (F.col("shard_base") + F.col("local_end") - F.col("n_tokens")).alias(
-            "cum_start"
-        ),
-    )
-    spans = stitched.select(
-        "source",
-        "doc_id",
-        "n_tokens",
-        "cum_start",
-        "cum_end",
-        F.explode(
-            F.expr(f"sequence(cum_start div {capacity}, (cum_end - 1) div {capacity})")
-        ).alias("chunk_id"),
-    )
-    seg_start = F.greatest("cum_start", F.col("chunk_id") * capacity)
-    seg_end = F.least("cum_end", (F.col("chunk_id") + 1) * capacity)
-    return spans.select(
-        "source",
-        "chunk_id",
-        "doc_id",
-        "n_tokens",
-        (seg_start - F.col("chunk_id") * capacity).alias("chunk_offset"),
-        (seg_end - seg_start).alias("n_in_chunk"),
-    )
 
 
 # ------------------------------------------------ curate-and-pack DAG

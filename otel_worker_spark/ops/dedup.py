@@ -235,20 +235,12 @@ def _minhash_sig_duck(n_perms: int = N_PERMS) -> str:
     return "[" + ", ".join(parts) + "]"
 
 
-def minhash_signatures_sql() -> str:
-    return f"""
-SELECT doc_id, {_minhash_sig_duck()} AS sig
-FROM (SELECT doc_id, {_hashes_duck_sql()} AS hs FROM documents) t
-"""
-
-
 def band_frame(
     sigs: DataFrame, n_perms: int = N_PERMS, n_bands: int = N_BANDS
 ) -> DataFrame:
     """(doc_id, band, band_sig) — the LSH banding of a signature
     frame, WITHOUT carrying the signature array (the r2 shuffle-weight
-    rework). Shared by the batch pair stage and the incremental
-    streaming dedup."""
+    rework)."""
     rows_per_band = n_perms // n_bands
     return sigs.select(
         "doc_id",

@@ -565,8 +565,7 @@ def benchmark_grams(tokens_df: DataFrame, L: int = SPAN_L) -> DataFrame:
     """The distinct L-token windows of a benchmark corpus, as the
     ``span`` probe table ``decontaminate_probe`` consumes. Built once
     per benchmark release (the benchmark is fixed-size — it doesn't
-    grow with the crawl) and persisted/reused by both the batch and
-    streaming probes."""
+    grow with the crawl) and persisted/reused across probes."""
     return _window_spans(tokens_df, L).select("span").distinct()
 
 
@@ -575,8 +574,8 @@ def decontaminate_probe(
 ) -> DataFrame:
     """Score every corpus document against a prebuilt benchmark gram
     table: per-doc window count, benchmark-hit count, and an integer
-    ``contaminated`` flag. The shared core of the batch registry query
-    and the streaming micro-batch probe.
+    ``contaminated`` flag. The core of the ``token_decontaminate``
+    registry query and of ``curation_gate``.
 
     Scale shape: the gram table is benchmark-bounded, so it broadcasts
     and the training corpus NEVER shuffles into the probe: windows
@@ -861,7 +860,7 @@ def sample_rates(mix_df: DataFrame) -> DataFrame:
     Up-weighted sources cap at keep-all (real pipelines repeat epochs
     instead — that's a write-side concern, not a gate). Split out from
     ``sample_gate`` so the rate table can be FROZEN at release time
-    and served to the streaming gate as a static dimension. Overflow
+    (``jobs.py token-curate --rates-out`` persists it). Overflow
     bound: SAMPLE_Q · sampled < 2^63 needs n_src < 5.5e11
     tokens/source (the rate branch only divides when sampled <
     n_src); beyond that rebase the quantum."""
@@ -880,8 +879,7 @@ def apply_sample_gate(tokens_df: DataFrame, rate_df: DataFrame) -> DataFrame:
     where u is the md5-derived uniform (``_uniform_expr``).
     Deterministic sampling (vs rand()) is what makes the 100-TB job
     RETRYABLE: a re-executed task keeps exactly the same rows, so
-    speculative/retried stages can't double- or under-sample — and
-    the streaming twin lands identical decisions per micro-batch.
+    speculative/retried stages can't double- or under-sample.
 
     Scale shape: the |sources|-row rate frame broadcasts; the corpus
     never shuffles — one narrow map computes u/kept per row."""

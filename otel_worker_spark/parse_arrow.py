@@ -35,11 +35,9 @@ worker parallelism is task parallelism.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 from datetime import datetime, timedelta
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .schemas import SPAN_KINDS, STATUS_CODES
@@ -560,27 +558,19 @@ def _null_row(doc_id, _tokens, n_tok, source, reason, ctx: dict | None = None):
     return [base]
 
 
-def _parse_payload(doc_id, payload, n_tok, source, with_inner, need=frozenset(_HEAVY)) -> list[dict]:
-    # JSON-shape failures follow from_json PERMISSIVE: a null-field
-    # struct, flattened (explode_outer) to one null-span row whose
-    # reason is invalid_trace_id.
-    # Only token/UTF-8 failures are "undecodable_payload".
-    # Every level follows the explode_outer contract: a null OR empty
-    # array yields exactly one null-span row carrying the parent
-    # context, and an array with a non-object element nulls the WHOLE
-    # array (from_json), not just that element.
-    try:
-        env = _loads(payload)
-    except ValueError:
-        env = None
-    return _walk_envelope(env, doc_id, n_tok, source, with_inner, need)
-
-
 def _walk_envelope(env, doc_id, n_tok, source, with_inner, need=frozenset(_HEAVY)) -> list[dict]:
     """The shared flatten/normalize walk over an OTLP/JSON-shaped
     envelope dict — fed by BOTH wire decoders (json.loads here,
     proto.decode_export_request for S2), so protobuf and JSON payloads
-    go through byte-identical downstream semantics."""
+    go through byte-identical downstream semantics.
+
+    JSON-shape failures follow from_json PERMISSIVE: a null-field
+    struct, flattened (explode_outer) to one null-span row whose reason
+    is invalid_trace_id; only token/UTF-8 failures are
+    "undecodable_payload". Every level follows the explode_outer
+    contract: a null OR empty array yields exactly one null-span row
+    carrying the parent context, and an array with a non-object element
+    nulls the WHOLE array (from_json), not just that element."""
     rs_list = _as_structlist(env.get("resourceSpans")) if isinstance(env, dict) else None
     if not rs_list:  # null or empty → one fully-null row
         return _null_row(doc_id, None, n_tok, source, "invalid_trace_id")

@@ -123,15 +123,6 @@ def trace_summary_json(spans: DataFrame, trace_id: str) -> dict:
     }
 
 
-MCP_RESOURCES_PAGE = 50  # trace_list(Some(50), None), commands/mcp.rs:348
-
-
-def mcp_resources_list(spans: DataFrame) -> DataFrame:
-    """The MCP server's resources/list page: the 50 most recent traces
-    (otel-worker-cli/src/commands/mcp.rs:341-374)."""
-    return traces_list(spans, limit=MCP_RESOURCES_PAGE)
-
-
 def _assemble_trace_tree(pdf: "pd.DataFrame") -> "pd.DataFrame":
     """One trace's spans → its tree rows (``build_trace_tree``). Module
     level, so a worker unpickling it imports this package

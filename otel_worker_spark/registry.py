@@ -48,7 +48,7 @@ from .ops import text as tx
 from .ops import timeseries as ts
 from .ops import token_stats as tks
 from .pipeline import transform_batch
-from .queries import traces_list
+from .queries import parent_child_spans, traces_list
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TIME_CUTOFF = "2024-01-15 00:00:00"
@@ -458,19 +458,7 @@ FROM spans GROUP BY signal
 
 def pipeline_parent_child(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: the trace-tree self-join (child → parent within a trace)."""
-    spans = _valid(spark, sf_dir)
-    child = spans.where(F.col("parent_span_id").isNotNull()).select(
-        "trace_id",
-        F.col("span_id").alias("child_span_id"),
-        "parent_span_id",
-        F.col("name").alias("child_name"),
-    )
-    parent = spans.select(
-        "trace_id",
-        F.col("span_id").alias("parent_span_id"),
-        F.col("name").alias("parent_name"),
-    )
-    return child.join(parent, ["trace_id", "parent_span_id"]).select(
+    return parent_child_spans(_valid(spark, sf_dir)).select(
         "trace_id", "child_span_id", "child_name", "parent_span_id", "parent_name"
     )
 

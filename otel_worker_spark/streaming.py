@@ -9,7 +9,9 @@ watermarks — each export request is applied immediately and a
 Spark equivalent: ``readStream`` over the token table directory,
 ``foreachBatch`` running the SAME ``ingest_batch`` the batch path
 uses (one engine core, thin protocol adapters — the reference's own
-shape, SURVEY §3.3). Exactly-once comes from two layers:
+shape, SURVEY §3.3). Like the reference, nothing here is windowed:
+each micro-batch is one ingest batch, applied whole. Exactly-once
+comes from two layers:
 
 - Spark's streaming checkpoint replays an unfinished micro-batch
   after a crash;
@@ -84,866 +86,3 @@ def start_ingest_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def windowed_span_counts(
-    spark: SparkSession,
-    source_dir: str,
-    service_lookup: DataFrame,
-    checkpoint_dir: str,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-    query_name: str = "windowed_span_counts",
-):
-    """Watermarked, windowed per-signal aggregate over the live span
-    stream — the reference has no windows (SURVEY §2.9: every export
-    applies immediately), but this is the standard extension an OTEL
-    pipeline grows: late data bounded by the watermark, state evicted
-    once the window closes (constant state at 10^12-seq scale).
-
-    Emits append-mode rows to an in-memory sink (swap for a table sink
-    in production); returns the StreamingQuery.
-    """
-    from pyspark.sql import functions as F
-
-    from .pipeline import transform_batch
-    from .schemas import TOKEN_SEQUENCES_SCHEMA
-
-    token_stream = (
-        spark.readStream.schema(TOKEN_SEQUENCES_SCHEMA).format("parquet").load(source_dir)
-    )
-    routed = transform_batch(
-        token_stream,
-        service_lookup,
-        with_inner=False,
-        columns=["trace_id", "span_id", "name", "severity", "service_name", "end_time"],
-    )
-    agg = (
-        routed.filter("signal != 'quarantine'")
-        .withWatermark("end_time", watermark)
-        .groupBy(F.window("end_time", window), "signal")
-        .agg(F.count("*").alias("n_spans"), F.sum("n_tok").alias("sum_n_tok"))
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def sessionize_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    gap_s: int = 1800,
-    query_name: str = "stream_sessions",
-    max_files_per_trigger: int | None = None,
-):
-    """Custom stateful streaming operator: gap-based sessionization via
-    ``applyInPandasWithState`` — the streaming twin of the batch
-    ``ops.timeseries.sessionize`` (same session definition, same
-    output row per closed session).
-
-    State per user: the open session's (start=min ts seen, last=max ts
-    seen — so cross-batch out-of-order arrivals above the watermark
-    can only widen the session, never regress it — n_events,
-    n_event_types is approximated exactly by carrying the distinct
-    type set — bounded: ≤5 types). A session CLOSES when a later event
-    arrives more than ``gap_s`` after its last event (emitted
-    immediately), or when the event-time watermark passes
-    ``last_ts + gap_s`` (state timeout → emitted and evicted). State
-    is therefore O(open sessions) = O(active users), constant per
-    user — the property that keeps a 10^12-row stream's state bounded.
-
-    Scale shape: one hash exchange on user_id (same as the batch twin)
-    feeding Arrow-batched per-group kernels; no collect, no global
-    sort. Output: append-mode closed sessions.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    EVENTS_SCHEMA = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    out_schema = (
-        "user_id long, session_start timestamp, session_end timestamp, "
-        "n_events long, n_event_types long, value_c long"
-    )
-    state_schema = (
-        "start long, last long, n_events long, value_c long, types string"
-    )
-    gap_us = gap_s * 1_000_000
-
-    def _emit(state_tuple):
-        start, last, n, vc, types = state_tuple
-        return {
-            "session_start": pd.Timestamp(start, unit="us"),
-            "session_end": pd.Timestamp(last, unit="us"),
-            "n_events": n,
-            "n_event_types": len(types.split(",")) if types else 0,
-            "value_c": vc,
-        }
-
-    def kernel(key, batches, state: GroupState):
-        (user_id,) = key
-        closed = []
-        if state.hasTimedOut:
-            if state.exists:
-                closed.append(_emit(tuple(state.get)))
-                state.remove()
-        else:
-            events = pd.concat(list(batches), ignore_index=True)
-            events = events.sort_values(["ts", "event_id"])
-            cur = tuple(state.get) if state.exists else None
-            import math
-
-            for ts_val, etype, value in zip(
-                events["ts"], events["event_type"], events["value"]
-            ):
-                us = ts_val.value // 1000  # ns → µs
-                # HALF_UP like Spark SQL round() — Python round() is
-                # banker's and would diverge from the batch twin
-                v100 = 100 * value
-                vc = int(math.floor(v100 + 0.5)) if v100 >= 0 else int(
-                    math.ceil(v100 - 0.5)
-                )
-                if cur is None:
-                    cur = (us, us, 1, vc, etype)
-                elif us - cur[1] > gap_us:
-                    closed.append(_emit(cur))
-                    cur = (us, us, 1, vc, etype)
-                else:
-                    types = cur[4]
-                    if etype not in types.split(","):
-                        types = types + "," + etype if types else etype
-                    # (min, max) tracking: an out-of-order event from a
-                    # LATER micro-batch (still above the watermark) with
-                    # ts inside the open session must extend the start
-                    # backwards, never regress last — otherwise
-                    # session_end can precede session_start and later
-                    # gap checks compare against the regressed ts
-                    cur = (
-                        min(cur[0], us),
-                        max(cur[1], us),
-                        cur[2] + 1,
-                        cur[3] + vc,
-                        types,
-                    )
-            if cur is not None:
-                state.update(cur)
-                # evict when the watermark passes the gap horizon
-                state.setTimeoutTimestamp(cur[1] // 1000 + gap_s * 1000)
-        if closed:
-            out = pd.DataFrame(closed)
-            out.insert(0, "user_id", user_id)
-            yield out
-
-    reader = spark.readStream.schema(EVENTS_SCHEMA).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    events = reader.load(source_dir)
-    sessions = (
-        events.withWatermark("ts", f"{gap_s} seconds")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            kernel,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    return (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def windowed_span_counts_to_store(
-    spark: SparkSession,
-    source_dir: str,
-    service_lookup: DataFrame,
-    store,
-    checkpoint_dir: str,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-):
-    """The production shape of the windowed aggregate (§2.9 closed,
-    r1 verdict item 9): the same watermarked window → per-signal agg,
-    landed in the idempotent-by-batch ``TableStore`` via foreachBatch
-    instead of the memory sink.
-
-    Exactly-once composition: Spark's checkpoint replays an unfinished
-    micro-batch, the store's batch_id dedup makes the replay a no-op —
-    identical to the ingest path's guarantee. Append output mode means
-    each batch carries only CLOSED windows (watermark-expired state),
-    so store rows are final, never updated — the windowed rollup table
-    a dashboard reads directly. The window struct is flattened to
-    (window_start, window_end) columns for a parquet-friendly layout
-    partitionable by window_start at scale.
-    """
-    from pyspark.sql import functions as F
-
-    from .pipeline import transform_batch
-
-    token_stream = (
-        spark.readStream.schema(TOKEN_SEQUENCES_SCHEMA).format("parquet").load(source_dir)
-    )
-    routed = transform_batch(
-        token_stream,
-        service_lookup,
-        with_inner=False,
-        columns=["trace_id", "span_id", "name", "severity", "service_name", "end_time"],
-    )
-    agg = (
-        routed.filter("signal != 'quarantine'")
-        .withWatermark("end_time", watermark)
-        .groupBy(F.window("end_time", window), "signal")
-        .agg(F.count("*").alias("n_spans"), F.sum("n_tok").alias("sum_n_tok"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "signal",
-            "n_spans",
-            "sum_n_tok",
-        )
-    )
-
-    def land(batch_df: DataFrame, epoch_id: int) -> None:
-        store.append(batch_df, batch_id=epoch_id)
-
-    return (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def dedup_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    within_watermark: str | None = None,
-):
-    """Streaming exact deduplication over a live document stream — the
-    streaming twin of ``ops.dedup.dedup_exact``, built on Spark's OWN
-    stateful operator (``dropDuplicates`` keyed by the text digest)
-    rather than a hand-rolled kernel: the state store handles
-    per-digest bookkeeping, checkpoint recovery and exactly-once
-    emission across restarts for free.
-
-    Semantics: the FIRST arrival of each digest is emitted (the
-    streaming-natural survivor rule — the reference's arrival order,
-    not min-doc_id); every later duplicate is suppressed, including
-    duplicates that arrive in later micro-batches or after a restart.
-
-    State is one entry per distinct digest. Unbounded streams pass
-    ``within_watermark`` (e.g. ``"24 hours"``) to switch to
-    ``dropDuplicatesWithinWatermark`` — state then evicts once the
-    event-time watermark passes, trading global dedup for bounded
-    state, the standard production knob at 10^12-row scale.
-
-    Survivors land in ``out_dir`` parquet via foreachBatch (the memory
-    sink cannot recover from a checkpoint, so it cannot express the
-    restart guarantee this operator exists to give). The landing is
-    EPOCH-IDEMPOTENT: each micro-batch overwrites its own
-    ``epoch=<id>`` subdirectory, so a batch replayed after a crash
-    between the write and the checkpoint commit rewrites the same
-    directory instead of appending duplicate survivors — a blind
-    mode('append') here would make the sink at-least-once.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    DOCS_SCHEMA = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("event_ts", T.TimestampType()),
-        ]
-    )
-    docs = spark.readStream.schema(DOCS_SCHEMA).format("parquet").load(source_dir)
-    digested = docs.withColumn("digest", F.md5("text"))
-    if within_watermark:
-        survivors = digested.withWatermark(
-            "event_ts", within_watermark
-        ).dropDuplicatesWithinWatermark(["digest"])
-    else:
-        survivors = digested.dropDuplicates(["digest"])
-    return (
-        survivors.select("digest", "doc_id", "source", "n_chars")
-        .writeStream.outputMode("append")
-        .foreachBatch(epoch_idempotent_sink(out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def lsh_dedup_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    state_dir: str,
-    out_dir: str,
-    jaccard_threshold: float = 0.5,
-    hash_impl: str = "md5",
-    n_perms: int | None = None,
-    n_bands: int | None = None,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming NEAR-duplicate detection: incremental MinHash-LSH
-    with exact-Jaccard verification — the streaming twin of
-    ``ops.dedup.verified_pairs`` (beyond ``dedup_stream``'s exact
-    digests). Each micro-batch:
-
-    1. signatures + band buckets for the NEW docs only (narrow maps);
-    2. candidates = new-bands equi-joined against (accumulated ∪ new)
-       bands — every unordered pair surfaces exactly once, in the
-       epoch where its LATER member arrives, so the union of all
-       epochs' output EQUALS the batch ``verified_pairs`` over the
-       same corpus (pytest-proven);
-    3. exact n-gram Jaccard on the candidate set against the
-       accumulated shingle state; survivors ≥ threshold are emitted;
-    4. the new docs' bands + shingles append to the state tables.
-
-    All three writes (pairs out, band state, shingle state) are
-    epoch-keyed overwrites → replay-idempotent, same guarantee as
-    ``dedup_stream``. State is the band table (ints per doc·band) and
-    the shingle sets — both O(corpus), partitioned by arrival epoch;
-    at 10^12-doc scale the band state would live in a bucketed table
-    keyed by (band, band_sig) so the per-batch candidate join prunes
-    to touched buckets instead of scanning all state.
-    """
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from .ops import dedup as dd
-
-    n_perms = n_perms or dd.N_PERMS
-    n_bands = n_bands or dd.N_BANDS
-    bands_dir = os.path.join(state_dir, "bands")
-    sh_dir = os.path.join(state_dir, "shingles")
-
-    DOCS_SCHEMA = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("event_ts", T.TimestampType()),
-        ]
-    )
-
-    def _state(path: str, schema: str):
-        try:
-            return spark.read.parquet(path).drop("epoch")
-        except Exception:  # first epoch: no state yet
-            return spark.createDataFrame([], schema)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.storagelevel import StorageLevel
-
-        sigs = dd.minhash_signatures(batch_df, hash_impl, n_perms)
-        bands_new = dd.band_frame(sigs, n_perms, n_bands).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        sh_new = batch_df.select(
-            "doc_id", dd.shingles_expr("text", dd.SHINGLE_K).alias("sh")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            # dropDuplicates on the unioned state: a replayed epoch may
-            # find its OWN rows already in state (crash after the state
-            # write, before the checkpoint commit) — dedup makes the
-            # replay read-idempotent too
-            bands_all = (
-                _state(bands_dir, "doc_id long, band int, band_sig string")
-                .unionByName(bands_new)
-                .dropDuplicates(["doc_id", "band", "band_sig"])
-            )
-            sh_all = (
-                _state(sh_dir, "doc_id long, sh array<string>")
-                .unionByName(sh_new)
-                .dropDuplicates(["doc_id"])
-            )
-            a, b = bands_new.alias("a"), bands_all.alias("b")
-            cand = (
-                a.join(b, ["band", "band_sig"])
-                .where(F.expr("a.doc_id <> b.doc_id"))
-                .select(
-                    F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-                    F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-                )
-                .distinct()
-            )
-            sh_a = sh_all.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-            sh_b = sh_all.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-            inter = "size(array_intersect(sh_a, sh_b))"
-            union = "size(sh_a) + size(sh_b) - size(array_intersect(sh_a, sh_b))"
-            pairs = (
-                cand.join(sh_a, "doc_a")
-                .join(sh_b, "doc_b")
-                .select(
-                    "doc_a",
-                    "doc_b",
-                    F.expr(f"CAST(floor(1000.0 * {inter} / ({union})) AS INT)").alias(
-                        "jaccard_m"
-                    ),
-                )
-                .where(F.col("jaccard_m") >= int(jaccard_threshold * 1000))
-            )
-            epoch_idempotent_sink(out_dir)(pairs, epoch_id)
-            epoch_idempotent_sink(bands_dir)(bands_new, epoch_id)
-            epoch_idempotent_sink(sh_dir)(sh_new, epoch_id)
-        finally:
-            bands_new.unpersist()
-            sh_new.unpersist()
-
-    reader = spark.readStream.schema(DOCS_SCHEMA).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return (
-        reader.load(source_dir)
-        .writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def epoch_idempotent_sink(out_dir: str):
-    """foreachBatch landing function with exactly-once output: epoch N
-    writes (overwrite) to ``out_dir/epoch=N``, so Spark's replay of an
-    uncommitted micro-batch — which re-delivers the same rows under
-    the same epoch_id — rewrites rather than duplicates. Readers see
-    the epoch as an ordinary partition column."""
-    import os
-
-    def land(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={int(epoch_id)}")
-        )
-
-    return land
-
-
-def decontaminate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    bench_dir: str,
-    L: int | None = None,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming benchmark decontamination — the streaming twin of
-    ``ops.token_stats.token_decontaminate``: a live stream of
-    pre-tokenized sequences (the north-rule table shape) is scored per
-    micro-batch against a STATIC benchmark gram table built once by
-    ``ops.token_stats.benchmark_grams`` and persisted at ``bench_dir``
-    (benchmarks are fixed at release time, so the probe side never
-    changes mid-stream — the classic stream-static broadcast-dimension
-    shape).
-
-    The operator is stateless per document (every L-window of a doc
-    arrives inside that doc's own row), so no Spark state store is
-    involved: each micro-batch runs the SAME audited batch probe
-    (``decontaminate_probe`` — broadcast grams, corpus never shuffles)
-    and lands through the epoch-idempotent sink, which makes replayed
-    uncommitted batches rewrite instead of duplicate — exactly-once
-    end to end with checkpoint restarts for free.
-    """
-    from .ops import token_stats as tks
-
-    span_l = L if L is not None else tks.SPAN_L
-    bench = spark.read.parquet(bench_dir)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        scored = tks.decontaminate_probe(batch_df, bench, span_l)
-        epoch_idempotent_sink(out_dir)(scored, epoch_id)
-
-    return _token_stream_job(
-        spark, source_dir, checkpoint_dir, process, max_files_per_trigger
-    )
-
-
-def _token_stream_job(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    process,
-    max_files_per_trigger: int | None = None,
-):
-    """Shared scaffold for the stream-static token operators: a
-    parquet stream of the north-rule table (the canonical
-    ``TOKEN_SEQUENCES_SCHEMA`` — one definition, not a per-operator
-    copy that could drift when the table gains a column), a
-    foreachBatch processor, checkpointed availableNow trigger."""
-    reader = spark.readStream.schema(TOKEN_SEQUENCES_SCHEMA).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return (
-        reader.load(source_dir)
-        .writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def sample_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    rates_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming mixture sampling — the streaming twin of
-    ``ops.token_stats.sample_gate``: a live stream of pre-tokenized
-    sequences (the north-rule table shape) is thinned per micro-batch
-    against a STATIC per-source rate table built once by
-    ``ops.token_stats.sample_rates(mixture_weights(reference))`` and
-    persisted at ``rates_dir`` (mixture weights are frozen at release
-    time from a reference corpus snapshot — recomputing them from each
-    micro-batch would make the keep decision depend on arrival
-    batching, which is exactly what the deterministic gate exists to
-    prevent).
-
-    Stateless per document — the md5-uniform and the broadcast rate
-    lookup live entirely in the doc's own row, so no state store is
-    involved, and because the uniform is content-derived (not rand()),
-    a replayed micro-batch lands IDENTICAL keep decisions; the
-    epoch-idempotent sink then makes the replay rewrite instead of
-    duplicate — exactly-once end to end with checkpoint restarts.
-    """
-    from .ops import token_stats as tks
-
-    rates = spark.read.parquet(rates_dir)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        gated = tks.apply_sample_gate(batch_df, rates)
-        epoch_idempotent_sink(out_dir)(gated, epoch_id)
-
-    return _token_stream_job(
-        spark, source_dir, checkpoint_dir, process, max_files_per_trigger
-    )
-
-
-def range_join_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    schema,
-    window_s: int = 300,
-    watermark: str = "30 minutes",
-    query_name: str = "range_join_stream",
-    max_files_per_trigger: int | None = None,
-):
-    """Watermarked STREAM-STREAM interval join — the streaming twin of
-    ``ops.timeseries.range_join``: every ``error`` event opens a
-    ``[ts, ts + window_s)`` impact window and picks up the same user's
-    other events that fall inside it, as both sides keep arriving.
-
-    The reference applies each export immediately and has no join
-    windows; this is the live-correlation extension an OTEL pipeline
-    grows (alert enrichment: "what did this user do right after the
-    error?"). Shape notes for 10^12-seq scale:
-
-    - Both sides carry a watermark and the join condition bounds the
-      event-time gap (``p_ts ∈ [e_ts, e_ts + window_s)``), so Spark's
-      symmetric hash join can EVICT state once the watermark passes a
-      row's match window — constant state, not unbounded buffers.
-    - The equi-key (``user_id``) hash-partitions both sides the same
-      way; the range predicate filters within the matched key group —
-      the same bucketization argument as the batch op, with time
-      handled by state eviction instead of bucket explosion.
-    - Inner join in append mode emits a match as soon as both rows
-      have arrived (no watermark delay on emission — only eviction).
-
-    Emits matched (error_id, probe_id) pairs to an in-memory sink;
-    returns the StreamingQuery. Pair set equals the batch join
-    exactly (tests/test_streaming_range_join.py).
-    """
-    from pyspark.sql import functions as F
-
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger is not None:
-        # availableNow honors this as the per-micro-batch cap — lets
-        # tests force the two join sides into different batches
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    events = reader.load(source_dir)
-    errors = (
-        events.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").cast("timestamp").alias("e_ts"),
-        )
-        .withWatermark("e_ts", watermark)
-    )
-    probes = (
-        events.filter(F.col("event_type") != "error")
-        .select(
-            F.col("event_id").alias("probe_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("event_type"),
-            F.col("ts").cast("timestamp").alias("p_ts"),
-        )
-        .withWatermark("p_ts", watermark)
-    )
-    joined = errors.join(
-        probes,
-        F.expr(
-            f"e_user = p_user AND p_ts >= e_ts"
-            f" AND p_ts < e_ts + INTERVAL {int(window_s)} SECONDS"
-        ),
-    ).select("error_id", "probe_id", "event_type", "e_ts", "p_ts")
-    return (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def funnel_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    gap_s: int = 1800,
-    query_name: str = "stream_funnel",
-    max_files_per_trigger: int | None = None,
-):
-    """Watermark-bounded streaming funnel — the stateful twin of
-    ``ops.timeseries.funnel`` with DOCUMENTED bounded-state semantics
-    (closes the r4 "streaming funnel deliberately skipped" item).
-
-    Why not the global batch funnel verbatim: it is NOT computable
-    with bounded state under unbounded reordering — a stage event may
-    arrive arbitrarily late and rewrite an already-emitted chain (the
-    recorded r4 analysis). The streaming form therefore scopes each
-    chain to a gap-closed ACTIVITY WINDOW per user:
-
-    - while a window is open, its funnel-stage events are BUFFERED in
-      state (state is bounded by the window's own stage events, never
-      by stream length; non-stage events only extend the activity
-      span);
-    - the window closes when a later event arrives more than
-      ``gap_s`` after the window's max ts (in-batch gap), or when the
-      event-time watermark passes ``max_ts + gap_s`` (timeout);
-    - at close the buffer is SORTED by (ts, event_type) and folded
-      with the exact batch chain logic — so any reordering WITHIN the
-      window (above the watermark) is corrected at close, and the fold
-      is bit-identical to the batch ``aggregate`` HOF;
-    - windows with no stage events are not emitted.
-
-    Late-data caveat (the semantic delta vs batch, stated, not
-    hidden): an event below the watermark — later than ``gap_s`` past
-    its window — is dropped by Spark and cannot resurrect the window.
-    On in-watermark data the result equals the batch funnel
-    restricted to each activity window (pytest-proven: with a gap
-    spanning each user's full history, stream chains == batch
-    chains exactly).
-
-    Scale shape: one hash exchange on user_id into Arrow-batched
-    per-group kernels; state O(open windows × window stage events).
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401  (parity w/ twins)
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from .ops.timeseries import FUNNEL_STAGES
-
-    s0, s1, s2 = FUNNEL_STAGES
-    EVENTS_SCHEMA = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    out_schema = (
-        "user_id long, window_start timestamp, window_end timestamp, "
-        "t_signup_us long, t_click_us long, t_purchase_us long, depth int"
-    )
-    # buffered stage events as parallel arrays + activity span
-    state_schema = "wstart long, last long, uss array<long>, types array<string>"
-    gap_us = gap_s * 1_000_000
-
-    def _fold(state_tuple):
-        wstart, last, uss, types = state_tuple
-        if not len(uss):
-            return None  # no stage events in the window → not emitted
-        chain = [None, None, None]
-        for us, etype in sorted(zip(uss, types)):
-            if etype == s0 and chain[0] is None:
-                chain[0] = us
-            elif etype == s1 and chain[0] is not None and chain[1] is None and us > chain[0]:
-                chain[1] = us
-            elif etype == s2 and chain[1] is not None and chain[2] is None and us > chain[1]:
-                chain[2] = us
-        return {
-            "window_start": pd.Timestamp(wstart, unit="us"),
-            "window_end": pd.Timestamp(last, unit="us"),
-            "t_signup_us": chain[0],
-            "t_click_us": chain[1],
-            "t_purchase_us": chain[2],
-            "depth": sum(v is not None for v in chain),
-        }
-
-    def kernel(key, batches, state: GroupState):
-        (user_id,) = key
-        closed = []
-        if state.hasTimedOut:
-            if state.exists:
-                got = _fold(tuple(state.get))
-                if got:
-                    closed.append(got)
-                state.remove()
-        else:
-            events = pd.concat(list(batches), ignore_index=True)
-            events = events.sort_values(["ts", "event_id"])
-            cur = None
-            if state.exists:
-                wstart, last, uss, types = state.get
-                cur = (wstart, last, list(uss), list(types))
-            for ts_val, etype in zip(events["ts"], events["event_type"]):
-                us = ts_val.value // 1000  # ns → µs
-                stage = [us] if etype in (s0, s1, s2) else []
-                tname = [etype] if stage else []
-                if cur is None:
-                    cur = (us, us, stage, tname)
-                elif us - cur[1] > gap_us:
-                    got = _fold(cur)
-                    if got:
-                        closed.append(got)
-                    cur = (us, us, stage, tname)
-                else:
-                    # (min, max) activity tracking, same rationale as
-                    # sessionize_stream: out-of-order above-watermark
-                    # events widen, never regress
-                    cur = (
-                        min(cur[0], us),
-                        max(cur[1], us),
-                        cur[2] + stage,
-                        cur[3] + tname,
-                    )
-            if cur is not None:
-                state.update(cur)
-                state.setTimeoutTimestamp(cur[1] // 1000 + gap_s * 1000)
-        if closed:
-            out = pd.DataFrame(closed)
-            out.insert(0, "user_id", user_id)
-            yield out
-
-    reader = spark.readStream.schema(EVENTS_SCHEMA).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    events = reader.load(source_dir)
-    funnels = (
-        events.withWatermark("ts", f"{gap_s} seconds")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            kernel,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    return (
-        funnels.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def ann_serve_stream(
-    spark: SparkSession,
-    source_dir: str,
-    index_root: str,
-    results_root: str,
-    checkpoint_dir: str,
-    k: int = 5,
-    n_probe: int = 4,
-):
-    """Streaming ANN serving over the PERSISTED index (ops/ann_index):
-    query vectors arrive as a parquet stream of (vec_id, embedding);
-    each micro-batch is answered from the index — probed-partition
-    reads only, no training — and the top-k results land exactly-once
-    in an idempotent-by-epoch TableStore (a replayed micro-batch
-    re-serves the same queries and the append is a no-op).
-
-    This is the full build-once / serve-forever lifecycle as a
-    Structured Streaming job: the index tables are the static side (a
-    deployment rebuilds them on schedule with the ann-build job), the
-    query stream is the hot path, and the per-batch driver work is the
-    LUT construction a serving coordinator performs per request.
-    Returns the StreamingQuery (availableNow trigger)."""
-    from pyspark.sql import types as T
-
-    from .ops import ann_index as ai
-    from .store import TableStore
-
-    QUERY_SCHEMA = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField(
-                "embedding", T.ArrayType(T.FloatType())
-            ),
-        ]
-    )
-    results = TableStore(spark, results_root)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        out = ai.ivfpq_serve_queries(batch_df, index_root, k=k, n_probe=n_probe)
-        results.append(out.withColumnRenamed("query_id", "vec_id"), epoch_id)
-
-    queries = (
-        spark.readStream.schema(QUERY_SCHEMA).format("parquet").load(source_dir)
-    )
-    return (
-        queries.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -9,7 +9,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from otel_worker_spark.ops import ann_index as ai
 from otel_worker_spark.ops import similarity as sim
@@ -133,99 +132,3 @@ def test_ann_cli_build_then_serve(tmp_root):
     out = json.loads(served.stdout.strip().splitlines()[-1])
     assert len(out["results"]) == 12
     assert {r["queryId"] for r in out["results"]} == {0, 1, 2, 3}
-
-
-def test_incremental_append_visible_in_serve(spark, embs, tmp_root):
-    """Index maintenance without retrain: build on the first 400
-    vectors, append the remaining 100 as a new batch encoded against
-    the PERSISTED model, then plant exact duplicates of the query
-    vectors as a second batch — serving must surface each duplicate as
-    its query's rank-1 neighbor (cosine exactly 1.0 beats every
-    non-identical vector), and batch replay must be a no-op."""
-    root = os.path.join(tmp_root, "ivf-incr")
-    old = embs.where(F.col("vec_id") < 400)
-    new = embs.where(F.col("vec_id") >= 400)
-    ai.build_ivf_index(old, root)
-    r1 = ai.append_ivf_postings(new, root, batch_id="day-2")
-    assert not r1["skipped"] and r1["row_count"] == 100
-    # replay = no-op (exactly-once maintenance)
-    r2 = ai.append_ivf_postings(new, root, batch_id="day-2")
-    assert r2["skipped"]
-    store = TableStore(spark, os.path.join(root, "postings"))
-    assert store.read().count() == 500
-    # appended assignments must equal the build-time fold bit-for-bit
-    got = {r.vec_id: r.cent_id for r in store.read().collect()}
-    rebuilt = os.path.join(tmp_root, "ivf-rebuilt")
-    ai.build_ivf_index(old, rebuilt)  # same corpus → same centroids
-    ai.append_ivf_postings(embs.where(F.col("vec_id") >= 400), rebuilt, "x")
-    want = {
-        r.vec_id: r.cent_id
-        for r in TableStore(spark, os.path.join(rebuilt, "postings")).read().collect()
-    }
-    assert got == want
-    # plant duplicates of queries 0..3 with fresh ids → rank-1 hits
-    dupes = (
-        embs.where(F.col("vec_id") < 4)
-        .select((F.col("vec_id") + 10_000).alias("vec_id"), "embedding",
-                F.col("label"))
-    )
-    ai.append_ivf_postings(dupes, root, batch_id="day-3")
-    top = {
-        r.query_id: (r.neighbor_id, r.cosine_u)
-        for r in ai.ivf_serve_topk(embs, root, n_queries=4, k=1).collect()
-    }
-    for q in range(4):
-        assert top[q][0] == q + 10_000, top
-        # cosine of an identical vector ≈ 1.0; dot/(sqrt·sqrt) may be
-        # one ulp under 1, so the floor-scaled value is 999999 or 10^6
-        assert top[q][1] in (999_999, 1_000_000)
-
-
-def test_incremental_append_ivfpq(spark, embs, tmp_root):
-    """Same maintenance contract for the composed index: append
-    encodes with the persisted coarse+codebook model; serve sees the
-    planted duplicates as best compressed-distance matches (ADC
-    distance 0 — identical vector ⇒ identical residual codes)."""
-    root = os.path.join(tmp_root, "ivfpq-incr")
-    ai.build_ivfpq_index(embs.where(F.col("vec_id") < 450), root)
-    ai.append_ivfpq_codes(embs.where(F.col("vec_id") >= 450), root, "day-2")
-    dupes = embs.where(F.col("vec_id") < 4).select(
-        (F.col("vec_id") + 10_000).alias("vec_id"), "embedding", "label"
-    )
-    ai.append_ivfpq_codes(dupes, root, "day-3")
-    assert TableStore(spark, os.path.join(root, "codes")).read().count() == 504
-    # k = everything: at ksub=8 the code space is coarse and many
-    # vectors tie at ADC 0 (ranked id-asc), so assert the duplicate's
-    # presence at distance 0 over the full ranking rather than top-5
-    by_q: dict[int, list] = {}
-    for r in ai.ivfpq_serve_topk(embs, root, n_queries=4, k=504).collect():
-        by_q.setdefault(r.query_id, []).append((r.neighbor_id, r.adc_d2_u))
-    for q in range(4):
-        # queries 0..3 are residual-codebook seeds, so their own
-        # quantization error is exactly 0 — the planted duplicate must
-        # surface with ADC distance exactly 0
-        assert (q + 10_000, 0) in by_q[q], sorted(by_q[q])[:8]
-
-
-def test_compaction_after_appends_preserves_serving(spark, embs, tmp_root):
-    """Daily appends fragment the posting lists into per-batch small
-    files; the TableStore's OPTIMIZE-style compaction must rewrite
-    them per cent_id partition — atomically, serving results
-    bit-identical, file count strictly down. This is the maintenance
-    loop a deployed index runs beside ann-build/ann-serve."""
-    root = os.path.join(tmp_root, "ivf-compact")
-    ai.build_ivf_index(embs.where(F.col("vec_id") < 400), root)
-    for i in range(4):
-        lo, hi = 400 + i * 25, 425 + i * 25
-        ai.append_ivf_postings(
-            embs.where(f"vec_id >= {lo} AND vec_id < {hi}"), root, f"day-{i}"
-        )
-    store = TableStore(spark, os.path.join(root, "postings"))
-    before = sorted(map(tuple, ai.ivf_serve_topk(embs, root).collect()))
-    files_before = len(store.live_files())
-    res = store.compact_small_files(target_rows=100_000)
-    assert res["files_in"] > 0 and res["rows"] == 500
-    files_after = len(store.live_files())
-    assert files_after < files_before
-    after = sorted(map(tuple, ai.ivf_serve_topk(embs, root).collect()))
-    assert after == before

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from otel_worker_spark.auth import UNAUTHORIZED, check_bearer, split_authorized
+from otel_worker_spark.auth import check_bearer
 
 
 @pytest.mark.parametrize(
@@ -25,19 +25,3 @@ from otel_worker_spark.auth import UNAUTHORIZED, check_bearer, split_authorized
 def test_check_bearer(header, ok):
     assert check_bearer(header, "s3cret") is ok
 
-
-def test_split_authorized_matches_scalar(spark):
-    headers = [
-        "Bearer s3cret", "Bearer wrong", "bearer s3cret", "Bearer  s3cret",
-        "Bearers3cret", "Basic s3cret", "", None, "Bearer s3cret extra", "Bearer",
-    ]
-    df = spark.createDataFrame(
-        [(i, h) for i, h in enumerate(headers)], "req_id int, authorization string"
-    )
-    good, bad = split_authorized(df, "s3cret")
-    good_ids = {r.req_id for r in good.collect()}
-    expected = {i for i, h in enumerate(headers) if check_bearer(h, "s3cret")}
-    assert good_ids == expected == {0}
-    rejected = bad.collect()
-    assert len(rejected) == len(headers) - 1
-    assert all(r.status == UNAUTHORIZED for r in rejected)

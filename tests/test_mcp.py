@@ -110,3 +110,39 @@ def test_stdio_loop_and_notifications(spark, tmp_root):
     assert replies[-1]["id"] == 2 and replies[-1]["result"] == {}
     # the client notification produced no response: 3 replies total
     assert len(replies) == 3
+
+
+def test_mcp_cli_over_stdio(spark, tmp_root):
+    """jobs.py mcp: the reference's `otel-worker mcp` stdio transport
+    (mcp.rs:545-551) as a process over a store another process wrote —
+    stdout carries the JSON-RPC responses and nothing else."""
+    import os
+    import subprocess
+    import sys
+
+    stores_dir = os.path.join(tmp_root, "stores")
+    api = TraceApi(spark, PipelineStores(spark, stores_dir), service_lookup_df(spark))
+    body = json.dumps(golden_trace_envelope(), separators=(",", ":")).encode()
+    assert api.ingest(body, "application/json")[0] == 200
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    stdin = "".join(
+        json.dumps(m) + "\n"
+        for m in (
+            {"jsonrpc": "2.0", "id": 1, "method": "initialize",
+             "params": {"protocolVersion": MCP_VERSION}},
+            {"jsonrpc": "2.0", "id": 2, "method": "resources/list"},
+        )
+    )
+    done = subprocess.run(
+        [sys.executable, os.path.join(repo, "jobs.py"), "mcp", "--stores", stores_dir],
+        input=stdin, capture_output=True, text=True, cwd=repo,
+        env=dict(os.environ, SPARK_GRAFT_CPUS="2"), timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    init, listed = [json.loads(line) for line in done.stdout.splitlines()]
+    assert init["id"] == 1 and init["result"]["protocolVersion"] == MCP_VERSION
+    assert listed["id"] == 2
+    assert listed["result"]["resources"] == [
+        {"name": f"trace {GOLDEN_TRACE_ID}", "uri": f"trace://{GOLDEN_TRACE_ID}"}
+    ]

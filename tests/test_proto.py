@@ -188,9 +188,10 @@ def test_protobuf_inner_matches_json_inner(spark):
 
 
 def test_protobuf_binary_column_input(spark):
-    """read_otlp_protobuf table shape: a `payload` binary column parses
-    identically to the token-array form. A null payload cell quarantines
-    as one undecodable_payload row instead of failing the batch."""
+    """A `(doc_id, payload, n_tok, source)` table whose `payload` binary
+    column holds wire bytes parses identically to the token-array form.
+    A null payload cell quarantines as one undecodable_payload row
+    instead of failing the batch."""
     env = golden_trace_envelope()
     wire = encode_export_request(env)
     df = spark.createDataFrame(

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -213,47 +212,6 @@ def test_pq_codes_within_range_and_self_nearly_exact(spark):
         assert r.adc_d2_u >= 0
         by_q.setdefault(r.query_id, []).append(r.rank)
     assert all(sorted(v) == [1, 2, 3, 4, 5] for v in by_q.values())
-
-
-# ------------------------------------------------- sharded packing
-
-
-def test_sharded_packing_equals_unsharded(spark):
-    """Two-level cumsum stitching must reproduce pack_chunks EXACTLY —
-    same (source, chunk_id, doc_id, offset, span) rows — while keeping
-    every window partition bounded by shard_docs."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    a = cp.pack_chunks(docs).collect()
-    # shard_docs=16 → many shards per source (25 docs/source at sf0.001
-    # spread over the doc_id range) → stitching genuinely exercised
-    b = cp.pack_chunks_sharded(docs, shard_docs=16).collect()
-    key = lambda r: (r.source, r.chunk_id, r.doc_id, r.chunk_offset, r.n_in_chunk)
-    assert sorted(map(key, a)) == sorted(map(key, b))
-    assert len(a) == len(b) > 0
-
-
-def test_sharded_packing_plan_shapes(spark):
-    """The main path windows on (source, shard); the offsets side is
-    tiny and reaches it as a BROADCAST — no source-wide window
-    partition anywhere in the corpus-sized path."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    s = (
-        cp.pack_chunks_sharded(docs)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in s
-    assert "SortMergeJoin" not in s
-    # corpus-side exchanges carry the shard key (bounded partitions);
-    # no corpus-sized exchange partitions on source alone
-    flat = s.replace(" ", "")
-    assert "shard#" in flat
-    w_keys = [
-        seg.split(")")[0]
-        for seg in flat.split("hashpartitioning(")[1:]
-    ]
-    assert any("shard#" in k for k in w_keys)
 
 
 def test_range_join_never_plans_a_nested_loop(spark):

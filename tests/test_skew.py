@@ -1,13 +1,12 @@
-"""Skew handling: the salting helpers must (a) compute the same
-answers as the plain aggregates they replace, (b) actually split a hot
-key across tasks, and (c) keep the two-phase plan shape (two hash
-exchanges, salted first)."""
+"""Skew handling: the two-phase salted aggregate must (a) compute the
+same answers as the plain aggregate it replaces and (b) keep the
+two-phase plan shape (two hash exchanges, salted first)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from otel_worker_spark.enrich import salted_repartition, two_phase_count_sum
+from otel_worker_spark.enrich import two_phase_count_sum
 
 
 def _skewed(spark):
@@ -47,24 +46,3 @@ def test_two_phase_plan_has_salted_then_key_exchange(spark):
     assert plan.count("Exchange hashpartitioning") == 2
     first = plan.index("Exchange hashpartitioning")
     assert "_salt" in plan[: first + 200] or "_salt" in plan
-
-
-def test_salted_repartition_splits_hot_key(spark):
-    df = _skewed(spark)
-    parts = (
-        salted_repartition(df, "source", salt_buckets=8, n_partitions=16)
-        .withColumn("pid", F.spark_partition_id())
-        .where("source = 'hot-service'")
-        .select("pid")
-        .distinct()
-        .count()
-    )
-    # without salting the hot key hashes to exactly ONE partition
-    assert parts >= 4
-
-
-def test_salted_repartition_loses_no_rows(spark):
-    df = _skewed(spark)
-    out = salted_repartition(df, "source", salt_buckets=8, n_partitions=16)
-    assert out.count() == df.count()
-    assert out.groupBy("source").count().count() == df.select("source").distinct().count()

@@ -8,7 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from otel_worker_spark import queries as Q
+from otel_worker_spark.api import TraceApi
 from otel_worker_spark.fixtures import service_lookup_df, token_sequences_from_events
+from otel_worker_spark.mcp import McpServer
 from otel_worker_spark.pipeline import PipelineStores, ingest_batch
 from otel_worker_spark.store import TableStore
 
@@ -132,8 +134,15 @@ def test_trace_summary_json_wire_shape(spark, ingested):
 
 
 def test_mcp_resources_page(spark, ingested):
+    """MCP resources/list pages the 50 most recent traces
+    (trace_list(Some(50), None), commands/mcp.rs:341-374)."""
     stores, _ = ingested
-    assert Q.mcp_resources_list(spans_of(stores)).count() == 50
+    srv = McpServer(TraceApi(spark, stores, service_lookup_df(spark)))
+    out = srv.handle({"jsonrpc": "2.0", "id": 1, "method": "resources/list"})
+    resources = out["result"]["resources"]
+    assert spans_of(stores).select("trace_id").distinct().count() > 50
+    assert len(resources) == 50
+    assert all(r["uri"].startswith("trace://") for r in resources)
 
 
 def test_parent_child_join(spark, ingested):

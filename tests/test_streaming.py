@@ -40,44 +40,6 @@ def test_stream_drains_and_matches_batch(spark, tmp_root):
     assert got == total - stores.sink("quarantine").count()
 
 
-def test_windowed_span_counts(spark, tmp_root):
-    """Watermarked windowed aggregate over the span stream: totals
-    across windows equal the batch pipeline's per-signal counts."""
-    from otel_worker_spark.pipeline import transform_batch
-    from otel_worker_spark.streaming import windowed_span_counts
-
-    src = os.path.join(tmp_root, "tokens")
-    _write_token_dir(spark, src)
-    lookup = service_lookup_df(spark)
-    q = windowed_span_counts(
-        spark, src, lookup, os.path.join(tmp_root, "ck"), query_name="wsc_test"
-    )
-    q.awaitTermination(120)
-    windowed = spark.sql("select signal, sum(n_spans) n from wsc_test group by signal")
-    got = {r.signal: r.n for r in windowed.collect()}
-    # append mode emits only CLOSED windows: window.end <= final
-    # watermark (= max event time - 30 min) — compute the exact same
-    # truth with a batch window aggregate
-    tok = token_sequences_from_events(spark, SF_DIR)
-    routed = transform_batch(tok, lookup, with_inner=False).filter(
-        "signal != 'quarantine'"
-    )
-    max_end = routed.agg(F.max("end_time")).collect()[0][0]
-    truth = {
-        r.signal: r.n
-        for r in routed.groupBy(F.window("end_time", "10 minutes"), "signal")
-        .agg(F.count("*").alias("w_n"))
-        .where(
-            F.col("window.end")
-            <= F.lit(max_end) - F.expr("INTERVAL 30 MINUTES")
-        )
-        .groupBy("signal")
-        .agg(F.sum("w_n").alias("n"))
-        .collect()
-    }
-    assert got == truth
-
-
 def test_stream_restart_is_exactly_once(spark, tmp_root):
     """Kill/restart mid-stream: re-running with the same checkpoint and
     sink stores lands zero duplicates (idempotent-by-batch appends)."""
@@ -119,44 +81,3 @@ def test_stream_restart_is_exactly_once(spark, tmp_root):
     for entry in stores.spans.lineage():
         if entry["op"] == "append":
             assert sum(f["rows"] for f in entry["files"]) == entry["rows"]
-
-
-def test_windowed_counts_land_in_table_store(spark, tmp_root):
-    """§2.9 production shape: the windowed aggregate lands in the
-    idempotent TableStore sink and matches the memory-sink run; a
-    second run with the same checkpoint adds nothing (exactly-once)."""
-    from otel_worker_spark.store import TableStore
-    from otel_worker_spark.streaming import (
-        windowed_span_counts,
-        windowed_span_counts_to_store,
-    )
-
-    src = os.path.join(tmp_root, "tokens")
-    _write_token_dir(spark, src)
-    lookup = service_lookup_df(spark)
-    store = TableStore(spark, os.path.join(tmp_root, "rollup"))
-    q = windowed_span_counts_to_store(
-        spark, src, lookup, store, os.path.join(tmp_root, "ck1")
-    )
-    q.awaitTermination(120)
-    landed = store.read()
-    q2 = windowed_span_counts(
-        spark, src, lookup, os.path.join(tmp_root, "ck2"), query_name="wsc_store_ref"
-    )
-    q2.awaitTermination(120)
-    ref = spark.sql(
-        "select window.start as window_start, window.end as window_end,"
-        " signal, n_spans, sum_n_tok from wsc_store_ref"
-    )
-    a = sorted(map(tuple, landed.collect()))
-    b = sorted(map(tuple, ref.collect()))
-    assert a == b and len(a) > 0
-
-    # replay with the same checkpoint: no new rows, no new commits
-    n_commits = len(store.lineage())
-    q3 = windowed_span_counts_to_store(
-        spark, src, lookup, store, os.path.join(tmp_root, "ck1")
-    )
-    q3.awaitTermination(120)
-    assert store.read().count() == len(a)
-    assert len(store.lineage()) == n_commits
